@@ -304,6 +304,78 @@ def _pair_hits_flat(x1, y1, x2, y2, yds, dxv, ln, degen,
     return hit
 
 
+def _flat_seg_argmins(ppx: np.ndarray, ppy: np.ndarray,
+                      s0: np.ndarray, scnt: np.ndarray,
+                      X1: np.ndarray, Y1: np.ndarray,
+                      X2: np.ndarray, Y2: np.ndarray,
+                      hav_proxy: bool = False):
+    """Per (point, tile) PAIR, the degree-planar and the cos(lat)-scaled
+    nearest point on the pair's segment slice `s0[i]:s0[i]+scnt[i]` of
+    the flat segment arrays (every scnt ≥ 1), computed flat over all
+    (pair, segment) rows: min + first-argmin via reduceat. This is the
+    arithmetic of predicates.nearest_on_segments_idx /
+    nearest_on_segments_scaled_idx formula for formula, with the same
+    first-hit tie-break, so the index kernels stay bit-identical to the
+    per-tile join and cogroup kernels. Both broadcast-index Q2 kernels
+    (finite tolerance and −1) call exactly this.
+
+    ppx/ppy: the pair's probe (already antimeridian-unrolled where the
+    caller needs it). Returns (nx, ny, d2, sx, sy, d2s, jn, js): the
+    planar winner and its squared degree distance, the scaled winner
+    and its squared scaled distance, and the flat indices of the two
+    winning segments. hav_proxy=True appends the flat index of the
+    geodesic mode's third winner, _best_segment_by_hav_proxy's
+    3-point haversine argmin over the same rows."""
+    starts = np.zeros(len(ppx), dtype=np.int64)
+    np.cumsum(scnt[:-1], out=starts[1:])
+    srep = np.repeat(np.arange(len(ppx), dtype=np.int64), scnt)
+    soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
+        - np.repeat(starts, scnt)
+    sidx = np.repeat(s0, scnt) + soffs
+    ax, ay = X1[sidx], Y1[sidx]
+    bx, by = X2[sidx], Y2[sidx]
+    dxs, dys = bx - ax, by - ay
+    ln2 = dxs * dxs + dys * dys
+    ln2 = np.where(ln2 == 0, 1.0, ln2)
+    px = ppx[srep]
+    py = ppy[srep]
+    qx = px - ax
+    qy = py - ay
+    t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
+    cx = ax + t * dxs
+    cy = ay + t * dys
+    d2 = (px - cx) ** 2 + (py - cy) ** 2
+    dmin2 = np.minimum.reduceat(d2, starts)
+    big = np.where(d2 == dmin2[srep], soffs, np.int64(1) << 62)
+    frow = starts + np.minimum.reduceat(big, starts)
+    wq = np.cos(np.radians(ppy))[srep]
+    dxw = dxs * wq
+    qxw = qx * wq
+    ln2s = dxw * dxw + dys * dys
+    ln2s = np.where(ln2s == 0, 1.0, ln2s)
+    ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
+    cxs = ax + ts * dxs
+    cys = ay + ts * dys
+    d2s = ((px - cxs) * wq) ** 2 + (py - cys) ** 2
+    dmin2s = np.minimum.reduceat(d2s, starts)
+    bigs = np.where(d2s == dmin2s[srep], soffs, np.int64(1) << 62)
+    frows = starts + np.minimum.reduceat(bigs, starts)
+    out = (cx[frow], cy[frow], dmin2, cxs[frows], cys[frows], dmin2s,
+           sidx[frow], sidx[frows])
+    if not hav_proxy:
+        return out
+    mx, my = (ax + bx) / 2.0, (ay + by) / 2.0
+    hv = np.minimum(
+        np.minimum(np.asarray(distance.haversine(ax, ay, px, py)),
+                   np.asarray(distance.haversine(bx, by, px, py))),
+        np.asarray(distance.haversine(mx, my, px, py)))
+    # np.argmin picks the first NaN when there is one; -inf stands in
+    hv = np.where(np.isnan(hv), -np.inf, hv)
+    hmin = np.minimum.reduceat(hv, starts)
+    bigp = np.where(hv == hmin[srep], soffs, np.int64(1) << 62)
+    return out + (sidx[starts + np.minimum.reduceat(bigp, starts)],)
+
+
 def _make_refine_fn(id_cols: tuple[str, ...]):
     """Build the exact point-refine UDF — the JTS
     `subGeom.intersects(point)` analog
@@ -706,6 +778,11 @@ def _dissolve_cells(cell_ids: np.ndarray) -> list[list[np.ndarray]]:
 class SpatialEngine:
     """Boundary set + tile index + query operators."""
 
+    # (pair, segment) rows one flat −1 index-kernel call holds at once:
+    # ~30 float64 temporaries per row stay cache-sized (measured ~1.8×
+    # faster per point than 2^18 rows on a 4-core host, ~8 MB/worker)
+    _FLAT_ROWS = 1 << 15
+
     def __init__(
         self,
         spark: SparkSession,
@@ -811,6 +888,7 @@ class SpatialEngine:
         self._iindex = None  # Broadcast of the interior-cell CSR
         self._iindex_off = False
         self._keep_cache: dict[str, np.ndarray] = {}
+        self._deep_cache: dict[str | None, tuple] = {}
         # QueryInitInfo analog (/root/reference/AreaCityQuery.java:1513-1604):
         # build-phase metadata, populated by from_geojson / tile_store.load
         self._init_meta: dict = {}
@@ -960,7 +1038,7 @@ class SpatialEngine:
     def _boundary_index(self) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
         every kind≠1 tile pre-decoded into flat numpy CSR arrays —
-        sorted cell table, per-cell tile ranges, per-tile region/kind/
+        sorted cell table, per-cell tile ranges, per-tile region/deep/kind/
         rect/segment ranges, concatenated segment component arrays with
         the refine kernel's derived terms (yds/dx/ln/degen) computed
         once at build instead of once per task.
@@ -985,6 +1063,7 @@ class SpatialEngine:
         out_schema = StructType([
             StructField("cell_id", LongType()),
             StructField("region_id", LongType()),
+            StructField("deep", IntegerType()),
             StructField("kind", IntegerType()),
             StructField("minx", DoubleType()),
             StructField("miny", DoubleType()),
@@ -1004,22 +1083,24 @@ class SpatialEngine:
                     s = predicates.segments_of_rings(core.all_rings(g))
                     segs.append(np.ascontiguousarray(
                         s, dtype=np.float64).tobytes())
-                out = pdf[["cell_id", "region_id", "kind",
+                out = pdf[["cell_id", "region_id", "deep", "kind",
                            "minx", "miny", "maxx", "maxy"]].copy()
                 out["segs"] = segs
                 yield out
 
-        pdf = (tb.select("cell_id", "region_id", "kind",
+        pdf = (tb.select("cell_id", "region_id", "deep", "kind",
                          "minx", "miny", "maxx", "maxy", "tile_wkb")
                .mapInPandas(extract, out_schema).toPandas())
         cell = pdf["cell_id"].to_numpy().astype(np.int64)
         region = pdf["region_id"].to_numpy().astype(np.int64)
+        deep = pdf["deep"].to_numpy().astype(np.int64)
         kind = pdf["kind"].to_numpy().astype(np.int64)
         rect = {k: pdf[k].to_numpy().astype(np.float64)
                 for k in ("minx", "miny", "maxx", "maxy")}
         order = np.lexsort((rect["miny"].view(np.int64),
                             rect["minx"].view(np.int64), region, cell))
-        cell, region, kind = cell[order], region[order], kind[order]
+        cell, region = cell[order], region[order]
+        deep, kind = deep[order], kind[order]
         rect = {k: v[order] for k, v in rect.items()}
         segs_list = [pdf["segs"].iloc[i] for i in order]
         seg_len = np.fromiter((len(b) // 32 for b in segs_list),
@@ -1056,7 +1137,7 @@ class SpatialEngine:
         np.cumsum(fcnt, out=fseg_ptr[1:])
         idx = {
             "cells": cells, "cell_ptr": cell_ptr,
-            "region": region, "kind": kind,
+            "region": region, "deep": deep, "kind": kind,
             "minx": rect["minx"], "miny": rect["miny"],
             "maxx": rect["maxx"], "maxy": rect["maxy"],
             "seg_ptr": seg_ptr,
@@ -1120,6 +1201,26 @@ class SpatialEngine:
             arr = np.sort(pdf["region_id"].to_numpy().astype(np.int64))
             self._keep_cache[where] = arr
         return arr
+
+    def _deep_meta(self, tiles_b: DataFrame, where: str | None) -> tuple:
+        """([(deep, region count)], (ex0, ey0, ex1, ey1)) of the −1
+        candidate tiles `tiles_b` — the kind-0 tiles under `where` —
+        with all-None extent when there are none. ≤ #deep-levels rows,
+        so the fetch is metadata-sized; cached per predicate text as
+        `_keep_region_ids` is, so repeat −1 queries run no job for it."""
+        meta = self._deep_cache.get(where)
+        if meta is None:
+            pdf = (tiles_b.groupBy("deep").agg(
+                F.countDistinct("region_id").alias("tot"),
+                F.min("minx").alias("ex0"), F.min("miny").alias("ey0"),
+                F.max("maxx").alias("ex1"), F.max("maxy").alias("ey1"))
+                .toPandas())
+            rows = [(int(d), int(t)) for d, t in zip(pdf["deep"], pdf["tot"])]
+            ext = ((float(pdf["ex0"].min()), float(pdf["ey0"].min()),
+                    float(pdf["ex1"].max()), float(pdf["ey1"].max()))
+                   if len(pdf) else (None, None, None, None))
+            meta = self._deep_cache[where] = (rows, ext)
+        return meta
 
     def _match_points(self, points: DataFrame, where: str | None = None,
                       lng="lng", lat="lat",
@@ -1605,7 +1706,8 @@ class SpatialEngine:
             if where:
                 keep = self.boundaries.filter(where).select("region_id")
                 t = t.join(F.broadcast(keep), "region_id", "left_semi")
-            dists = self._dists_unlimited_iterative(misses, t, k)
+            dists = self._dists_unlimited_iterative(misses, t, k,
+                                                    where=where)
             return self._finish_tolerance(base_out, dists, k)
 
         dist_schema = StructType([
@@ -1714,10 +1816,9 @@ class SpatialEngine:
         a single mapInPandas over the miss set — per-point cover cells
         enumerated in-kernel (`_circle_cell_cover`), candidate tiles
         looked up in the index CSR (searchsorted), per-(point, tile)
-        planar-nearest computed FLAT over all (pair, segment) rows
-        (min + first-argmin via reduceat — the exact arithmetic of
-        predicates.nearest_on_segments, over the window-run-filtered
-        segment block), then the same inscribed/escribed radius gates
+        planar and scaled nearest computed FLAT by `_flat_seg_argmins`
+        over the window-run-filtered segment block, then the same
+        inscribed/escribed radius gates
         + exact 24-gon test as the join-path dist_fn. Output rows are
         bit-identical to the cover-join path (checksum-swept); only
         the plan differs — no tile bytes ever shuffle."""
@@ -1780,48 +1881,8 @@ class SpatialEngine:
                     yield empty
                     continue
                 s0 = fptr[tix]
-                srep = np.repeat(np.arange(len(prep), dtype=np.int64), scnt)
-                soffs = np.arange(int(scnt.sum()), dtype=np.int64) \
-                    - np.repeat(np.cumsum(scnt) - scnt, scnt)
-                sidx = np.repeat(s0, scnt) + soffs
-                ax, ay = FX1[sidx], FY1[sidx]
-                bx, by = FX2[sidx], FY2[sidx]
-                dxs, dys = bx - ax, by - ay
-                ln2 = dxs * dxs + dys * dys
-                ln2 = np.where(ln2 == 0, 1.0, ln2)
-                pp = prep[srep]
-                qx = px[pp] - ax
-                qy = py[pp] - ay
-                t = np.clip((qx * dxs + qy * dys) / ln2, 0.0, 1.0)
-                cx = ax + t * dxs
-                cy = ay + t * dys
-                d2 = (px[pp] - cx) ** 2 + (py[pp] - cy) ** 2
-                starts = np.zeros(len(prep), dtype=np.int64)
-                np.cumsum(scnt[:-1], out=starts[1:])
-                dmin2 = np.minimum.reduceat(d2, starts)
-                # first row (in segment order) achieving the min — the
-                # argmin predicates.nearest_on_segments would pick
-                big = np.where(d2 == dmin2[srep], soffs, np.int64(1) << 62)
-                frow = starts + np.minimum.reduceat(big, starts)
-                nx, ny = cx[frow], cy[frow]
-                # anisotropy-corrected second candidate (r5) — the flat
-                # transcription of nearest_on_segments_scaled, formula
-                # for formula (bit-identity with the join path's matrix
-                # form; same first-hit tie-break)
-                wq = np.cos(np.radians(py))[pp]
-                dxw = dxs * wq
-                qxw = qx * wq
-                ln2s = dxw * dxw + dys * dys
-                ln2s = np.where(ln2s == 0, 1.0, ln2s)
-                ts = np.clip((qxw * dxw + qy * dys) / ln2s, 0.0, 1.0)
-                cxs = ax + ts * dxs
-                cys = ay + ts * dys
-                d2s = ((px[pp] - cxs) * wq) ** 2 + (py[pp] - cys) ** 2
-                dmin2s = np.minimum.reduceat(d2s, starts)
-                bigs = np.where(d2s == dmin2s[srep], soffs,
-                                np.int64(1) << 62)
-                frows = starts + np.minimum.reduceat(bigs, starts)
-                sxx, syy = cxs[frows], cys[frows]
+                nx, ny, dmin2, sxx, syy, _, _, _ = _flat_seg_argmins(
+                    px[prep], py[prep], s0, scnt, FX1, FY1, FX2, FY2)
                 d_planar = np.sqrt(dmin2)
                 # per-point circle radii — the exact CreateSimpleCircle
                 # step-ladder arithmetic (identical to dist_fn's)
@@ -1861,7 +1922,8 @@ class SpatialEngine:
 
     def _dists_unlimited_iterative(self, misses: DataFrame,
                                    tiles_b: DataFrame, k: int,
-                                   small_direct: int = 100_000) -> DataFrame:
+                                   small_direct: int = 100_000,
+                                   where: str | None = None) -> DataFrame:
         """tolerance=-1 distance stage without materializing the miss
         set on the driver (any miss-set size): per-round radius
         doubling. Each round covers every active point's radius-r bbox
@@ -1879,6 +1941,16 @@ class SpatialEngine:
         and per-(point, region) minima flow between rounds
         (localCheckpoint'd, ContextCleaner-reclaimed); the driver sees
         a round counter and an isEmpty flag — never rows.
+
+        `tiles_b` must be the kind-0 tiles under `where`: the per-deep
+        metadata is cached under `where` (`_deep_meta`), and the
+        terminal full scan's index regime filters the broadcast index
+        by `where` in-kernel. That terminal scan runs against the
+        broadcast boundary index while it fits its byte budget
+        (`_dists_full_scan_index`), else as the cogroup
+        (`_dists_full_scan`); `last_q2_iter_stats["terminal_path"]`
+        records which ("index" / "cogroup", None when the rounds
+        converged first).
 
         Distance definition (r5): haversine at the better of TWO
         argmin candidates — the degree-planar winner (reference
@@ -1899,21 +1971,11 @@ class SpatialEngine:
         r0 = 262144.0        # 2^18 m starting radius
         growth = 32.0        # ×32/round → ≤3 rounds to planet scale
 
-        # tiny metadata dims (≤ #deep-levels rows), ONE pass over tiles
-        deep_stats = (
-            tiles_b.groupBy("deep").agg(
-                F.countDistinct("region_id").alias("tot"),
-                F.min("minx").alias("ex0"), F.min("miny").alias("ey0"),
-                F.max("maxx").alias("ex1"), F.max("maxy").alias("ey1"))
-            .localCheckpoint(eager=True)
-        )
-        deep_tot = deep_stats.select("deep", "tot")
-        ex_row = deep_stats.agg(
-            F.min("ex0").alias("ex0"), F.min("ey0").alias("ey0"),
-            F.max("ex1").alias("ex1"), F.max("ey1").alias("ey1")).first()
+        # tiny metadata dims (≤ #deep-levels rows), memoized per `where`
+        deep_rows, ext = self._deep_meta(tiles_b, where)
+        deep_tot = self.spark.createDataFrame(deep_rows, "deep int, tot long")
         extent = self.spark.createDataFrame(
-            [(ex_row["ex0"], ex_row["ey0"], ex_row["ex1"], ex_row["ey1"])],
-            "ex0 double, ey0 double, ex1 double, ey1 double")
+            [ext], "ex0 double, ey0 double, ex1 double, ey1 double")
 
         cover_schema = StructType([
             StructField("point_id", LongType()),
@@ -1972,13 +2034,11 @@ class SpatialEngine:
                   .localCheckpoint(eager=True))  # (point, deep) state
         t_side = F.broadcast(tiles_b) if self.broadcast_tiles else tiles_b
         # beyond ~the extent's own span the cell cover prunes nothing —
-        # switch to the cogrouped full reverse scan. (ex_row is a 1-row
-        # metadata fetch, same class as QueryInitInfo's kind counts.)
-        if ex_row["ex0"] is None:
+        # switch to the exact full reverse scan
+        if ext[0] is None:
             r_switch = 0.0  # no tiles at all: empty terminal round
         else:
-            r_switch = 111320.0 * max(ex_row["ex1"] - ex_row["ex0"],
-                                      ex_row["ey1"] - ex_row["ey0"])
+            r_switch = 111320.0 * max(ext[2] - ext[0], ext[3] - ext[1])
         parts: list[DataFrame] = []
         r = r0
         n_prev = active.count()  # scalar control-flow action
@@ -1995,23 +2055,35 @@ class SpatialEngine:
             "round_radius_m": [], "round_candidates": [],
             "round_frontier_after": [],
             "terminal_full_scan": False, "terminal_reason": None,
+            "terminal_path": None,
         }
         self.last_q2_iter_stats = stats
+
+        def full_scan(active: DataFrame, n_pairs: int) -> DataFrame:
+            # the regime split Q1 and finite Q2 share: the broadcast
+            # index when it fits its byte budget, else the cogroup
+            stats["terminal_full_scan"] = True
+            if self._boundary_index() is not None:
+                stats["terminal_path"] = "index"
+                return self._dists_full_scan_index(
+                    active, self._keep_region_ids(where), n_pairs)
+            stats["terminal_path"] = "cogroup"
+            return self._dists_full_scan(active, tiles_b)
+
         w = Window.partitionBy("point_id", "deep").orderBy("dist_m", "region_id")
         while True:
             # direct-to-terminal fast paths: (a) the remaining frontier
-            # is small enough that the exact cogrouped scan is cheaper
+            # is small enough that the exact full scan is cheaper
             # than ANY round's fixed job overhead (small_direct is
             # (point,deep)-pair count — ~10 Spark jobs of cover-round
             # machinery never beat a sub-second full scan), (b) the
             # radius has reached the extent span so the cover prunes
             # nothing anyway
             if r >= r_switch or n_prev <= small_direct:
-                stats["terminal_full_scan"] = True
                 stats["terminal_reason"] = (
                     "radius_reached_extent" if r >= r_switch
                     else "small_frontier")
-                parts.append(self._dists_full_scan(active, tiles_b))
+                parts.append(full_scan(active, n_prev))
                 break
             act_pts = active.groupBy("point_id", "lng", "lat").agg(
                 F.expr("bit_or(cast(shiftleft(1, cast(deep AS INT)) AS BIGINT))")
@@ -2058,9 +2130,8 @@ class SpatialEngine:
                 # feature of some deep is a large fraction of the world
                 # away for most points) — radius doubling would just
                 # re-pay the cover; go straight to the exact full scan
-                stats["terminal_full_scan"] = True
                 stats["terminal_reason"] = "frontier_stall"
-                parts.append(self._dists_full_scan(active, tiles_b))
+                parts.append(full_scan(active, n_act))
                 break
             n_prev = n_act
             r *= growth
@@ -2070,9 +2141,176 @@ class SpatialEngine:
             out = out.unionByName(p)
         return out
 
+    def _dists_full_scan_index(self, active: DataFrame,
+                               keep: np.ndarray | None,
+                               n_pairs: int) -> DataFrame:
+        """Terminal round of the tolerance=-1 iteration against the
+        broadcast boundary index: one mapInPandas over the active
+        (point, deep) rows, no tile bytes shuffled or replicated.
+        Candidates per point are the kind-0 tiles of its needed deeps
+        (region in `keep` under `where`) that keep window-filtered
+        distance segments. Per (point, tile): both argmins flat via
+        `_flat_seg_argmins` on the antimeridian-unrolled probe (the
+        cogroup kernel's per-tile unroll); per (point, region): each
+        metric min-reduced on its own, then haversine at the two
+        winners under the 1e-12 guard — the `_dists_full_scan` and
+        `_cand_dists` definition, bit-identical distances. Geodesic
+        mode reduces the per-tile meters minimum (argmin haversines +
+        65 samples on the three winning segments) instead.
+
+        Points are processed in chunks of ≤ `_FLAT_ROWS` (pair,
+        segment) rows. A point's rows may arrive split across batches
+        or partitions: each (point, deep) row yields only its own
+        deep's regions, so nothing needs regrouping first."""
+        bc, _ = self._boundary_index()
+        refine = self.geodesic_refine
+        max_rows = self._FLAT_ROWS
+        schema = StructType([
+            StructField("point_id", LongType()),
+            StructField("region_id", LongType()),
+            StructField("dist_m", DoubleType()),
+        ])
+
+        def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            I = bc.value
+            region, deep = I["region"], I["deep"]
+            fptr = I["fseg_ptr"]
+            FX1, FY1, FX2, FY2 = I["FX1"], I["FY1"], I["FX2"], I["FY2"]
+            fcnt = fptr[1:] - fptr[:-1]
+            cand = (I["kind"] == 0) & (fcnt > 0)
+            if keep is not None:
+                cand &= _in_sorted(region, keep)
+            cxc = (I["minx"] + I["maxx"]) / 2.0
+
+            def chunk(px, py, tl, gs):
+                """(point, region, dist) rows for points px/py against
+                tiles `tl`, grouped by region with group starts `gs`."""
+                P, T = len(px), len(tl)
+                prep = np.repeat(np.arange(P, dtype=np.int64), T)
+                tix = np.tile(tl, P)
+                scnt = fcnt[tix]
+                cum = np.cumsum(scnt)
+                cuts = [0]
+                while cuts[-1] < len(tix):  # ≤ max_rows rows per piece
+                    base = cum[cuts[-1] - 1] if cuts[-1] else 0
+                    cuts.append(max(cuts[-1] + 1, int(np.searchsorted(
+                        cum, base + max_rows, side="right"))))
+                res = []
+                for a, b in zip(cuts[:-1], cuts[1:]):
+                    pp, tt = prep[a:b], tix[a:b]
+                    ppx = px[pp]
+                    # antimeridian unroll: shift the PROBE a whole
+                    # number of turns to within 180° of the tile for
+                    # the argmins only (round()==0 → pxa == px
+                    # bit-for-bit for every in-range pair)
+                    pxa = ppx - 360.0 * np.round((ppx - cxc[tt]) / 360.0)
+                    r = _flat_seg_argmins(pxa, py[pp], fptr[tt], scnt[a:b],
+                                          FX1, FY1, FX2, FY2,
+                                          hav_proxy=refine)
+                    if not refine:
+                        res.append(r[:6])
+                        continue
+                    # geodesic mode: every per-tile candidate in METERS
+                    # (haversine at both argmins + 65 samples along the
+                    # three winning segments), min-reduced across tiles
+                    # in meters — a degree metric can pick the wrong
+                    # tile at planetary range
+                    qy = py[pp]
+                    v = np.minimum(
+                        np.asarray(distance.haversine(r[0], r[1], ppx, qy)),
+                        np.asarray(distance.haversine(r[3], r[4], ppx, qy)))
+                    for j in (r[8], r[6], r[7]):
+                        for c0 in range(0, len(j), 8192):
+                            sl = slice(c0, c0 + 8192)
+                            js = j[sl]
+                            np.minimum(v[sl], _refine_hav_on_segments(
+                                np.stack([FX1[js], FY1[js], FX2[js],
+                                          FY2[js]], axis=1),
+                                ppx[sl], qy[sl]), out=v[sl])
+                    res.append((v,))
+                # (point, region) groups: every point pairs with the
+                # same region-sorted tile list
+                gst = (np.arange(P, dtype=np.int64)[:, None] * T
+                       + gs[None, :]).ravel()
+                gp = np.repeat(np.arange(P, dtype=np.int64), len(gs))
+                rg = np.tile(region[tl[gs]], P)
+                if refine:
+                    v = np.concatenate([x[0] for x in res])
+                    return gp, rg, np.minimum.reduceat(v, gst)
+                nx, ny, d2, sx, sy, d2s = (np.concatenate([x[i] for x in res])
+                                           for i in range(6))
+                grp = np.repeat(np.arange(len(gst)),
+                                np.diff(np.append(gst, len(tix))))
+                row = np.arange(len(tix), dtype=np.int64)
+
+                def first_min(v):
+                    # each metric's own argmin per (point, region),
+                    # first tile in index order on ties
+                    vmin = np.minimum.reduceat(v, gst)
+                    return np.minimum.reduceat(
+                        np.where(v == vmin[grp], row, len(row)), gst)
+
+                w = first_min(np.sqrt(d2))
+                ws = first_min(np.sqrt(d2s))
+                d0 = np.asarray(distance.haversine(
+                    nx[w], ny[w], px[gp], py[gp]), dtype=np.float64)
+                d1 = np.asarray(distance.haversine(
+                    sx[ws], sy[ws], px[gp], py[gp]), dtype=np.float64)
+                # same genuine-improvement guard as the tolerance paths
+                return gp, rg, np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
+
+            for pdf in it:
+                out_p, out_r, out_d = [], [], []
+                pid = pdf["point_id"].to_numpy()
+                bit = np.left_shift(np.int64(1),
+                                    pdf["deep"].to_numpy().astype(np.int64))
+                upid, first, inv = np.unique(pid, return_index=True,
+                                             return_inverse=True)
+                msk = np.zeros(len(upid), dtype=np.int64)
+                np.bitwise_or.at(msk, inv, bit)
+                px = pdf["lng"].to_numpy(dtype=np.float64)[first]
+                py = pdf["lat"].to_numpy(dtype=np.float64)[first]
+                for m in np.unique(msk):
+                    # the mask's tiles, region-sorted (index order
+                    # within a region), and each region's first slot
+                    tl = np.nonzero(cand & (((m >> deep) & 1) == 1))[0]
+                    if not len(tl):
+                        continue
+                    tl = tl[np.argsort(region[tl], kind="stable")]
+                    gs = np.nonzero(np.diff(region[tl], prepend=-1))[0]
+                    sel = np.nonzero(msk == m)[0]
+                    step = max(1, max_rows // int(fcnt[tl].sum()))
+                    for c0 in range(0, len(sel), step):
+                        ps = sel[c0:c0 + step]
+                        p, rg, d = chunk(px[ps], py[ps], tl, gs)
+                        out_p.append(upid[ps][p])
+                        out_r.append(rg)
+                        out_d.append(d)
+                yield pd.DataFrame({
+                    "point_id": (np.concatenate(out_p) if out_p
+                                 else np.empty(0)).astype("int64"),
+                    "region_id": (np.concatenate(out_r) if out_r
+                                  else np.empty(0)).astype("int64"),
+                    "dist_m": (np.concatenate(out_d) if out_d
+                               else np.empty(0)).astype("float64"),
+                })
+
+        src = active.select("point_id", "lng", "lat", "deep")
+        if n_pairs > 4096:
+            # ~7 ms of kernel per pair on the benchmark fixture: a big
+            # frontier must not ride AQE's byte-based coalescing of the
+            # skinny upstream shuffle into a few tasks; smaller ones
+            # keep their partitioning (measured faster without the
+            # exchange up to 1,000 points)
+            src = src.repartition(
+                int(self.spark.sparkContext.defaultParallelism), "point_id")
+        return src.mapInPandas(fn, schema)
+
     def _dists_full_scan(self, active: DataFrame,
                          tiles_b: DataFrame) -> DataFrame:
-        """Terminal round of the tolerance=-1 iteration: an exact full
+        """Terminal round of the tolerance=-1 iteration for boundary
+        sets past the index budget (`_dists_full_scan_index` is the
+        in-budget twin): an exact full
         reverse scan for the remaining (point, deep) pairs, expressed
         as a cogrouped applyInPandas — points hash-bucket by point_id,
         the needed deeps' boundary tiles REPLICATE to every bucket

@@ -1562,12 +1562,14 @@ def synthesize_mixed_images(spans: DataFrame, ref_col: str = "ref",
 
 def triage_image(data: bytes) -> tuple[str, int | None]:
     """Classify one blob → (status, px_sum-or-None). Never raises on
-    the variants the corpus synthesizer produces; a decode is only
-    attempted for containers the codecs support."""
+    the variants the corpus synthesizer produces, nor on a header cut
+    short (`reject:*-malformed`); a decode is only attempted for
+    containers the codecs support."""
     if data[: len(_PNG_SIG)] == _PNG_SIG:
         # IHDR is the first chunk by spec; fields at fixed offsets
+        # 16..28, so a shorter blob cannot carry them
         tag = data[12:16]
-        if tag != b"IHDR":
+        if tag != b"IHDR" or len(data) < 29:
             return "reject:png-malformed", None
         _, _, depth, ctype, _, _, inter = struct.unpack_from(
             ">IIBBBBB", data, 16)
@@ -1584,16 +1586,24 @@ def triage_image(data: bytes) -> tuple[str, int | None]:
         return "reject:png-unsupported", None
     if data[:2] == b"\xff\xd8":
         pos = 2
-        while pos + 4 <= len(data):
+        while pos + 2 <= len(data):
             if data[pos] != 0xFF:
                 break
             marker = data[pos + 1]
+            if marker == 0xFF:  # fill byte: the marker starts one later
+                pos += 1
+                continue
+            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+                pos += 2  # TEM / RSTn stand alone: no length field
+                continue
             if marker == 0xC2:
                 return "reject:jpeg-progressive", None
             if marker == 0xC0:
                 return "ok:jpeg-baseline-header", None
             if marker == 0xD9:
                 break
+            if pos + 4 > len(data):
+                return "reject:jpeg-malformed", None
             (ln,) = struct.unpack_from(">H", data, pos + 2)
             pos += 2 + ln
         return "reject:jpeg-unsupported", None

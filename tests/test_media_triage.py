@@ -71,3 +71,29 @@ def test_mixed_corpus_covers_all_variants(spark):
              "reject:jpeg-progressive"][v]
         expect[k] = expect.get(k, 0) + 1
     assert counts == expect
+
+
+def test_short_png_header_rejects_malformed():
+    # signature + IHDR tag but the IHDR fields cut short: the
+    # fixed-offset unpack needs 29 bytes
+    ihdr = (media._PNG_SIG + b"\x00\x00\x00\x0dIHDR"
+            + struct.pack(">IIBBBBB", 4, 3, 8, 0, 0, 0, 0))
+    assert len(ihdr) == 29
+    for cut in range(16, 29):
+        assert media.triage_image(ihdr[:cut]) \
+            == ("reject:png-malformed", None)
+
+
+def test_jpeg_walker_skips_standalone_markers_and_rejects_truncation():
+    sof2 = b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, 3, 4, 1) + b"\x01\x11\x00"
+    # fill bytes, TEM and RSTn carry no length field: the walker must
+    # step over them rather than read their successors as a length
+    for pad in (b"\xff\xff", b"\xff\x01", b"\xff\xd0", b"\xff\xd7",
+                b"\xff\xff\xff\xd3"):
+        assert media.triage_image(b"\xff\xd8" + pad + sof2 + b"\xff\xd9") \
+            == ("reject:jpeg-progressive", None)
+    # APP0 marker whose 2-byte length field is cut off
+    assert media.triage_image(b"\xff\xd8\xff\xe0") \
+        == ("reject:jpeg-malformed", None)
+    assert media.triage_image(b"\xff\xd8\xff\xe0\x00") \
+        == ("reject:jpeg-malformed", None)

@@ -89,9 +89,13 @@ def test_polar_tolerance_distance_near_geodesic_truth(spark, polar_engine):
 
 def test_polar_unlimited_tolerance_distance_near_geodesic_truth(
         spark, polar_engine):
-    # tolerance=-1 rides different kernels (_cand_dists /
-    # _dists_full_scan); since late r5 they carry the same second
-    # candidate, min-reduced across tiles in its own metric
+    # tolerance=-1 rides different kernels: the cover rounds'
+    # _cand_dists, and a terminal full scan that is the broadcast-index
+    # _dists_full_scan_index in budget (this fixture) or the cogrouped
+    # _dists_full_scan past it. Both full scans take their argmins from
+    # the same arithmetic (engine._flat_seg_argmins is the flat form of
+    # the predicates kernels) and carry the scaled second candidate,
+    # min-reduced across tiles in its own metric
     probes = spark.createDataFrame(
         [(1, 14.0, 82.0)], "point_id long, lng double, lat double")
     rows = polar_engine.query_points_with_tolerance(probes, -1).collect()
