@@ -41,39 +41,133 @@ from . import GRID_VERSION, grid, tiler
 from .geom import core, distance, predicates, wkb, wkt as wkt_codec
 from .sources import geojson_source
 
-def _distance_segs(g: dict, minx: float, miny: float,
-                   maxx: float, maxy: float) -> np.ndarray:
-    """Segments of a boundary-tile piece fit for NEAREST-DISTANCE use.
+def _tile_segs(w) -> np.ndarray:
+    """(n, 4) float64 ring segments of one tile's WKB (none for a null
+    WKB) — the one decode behind the boundary index's distributed
+    extract and the join kernels' per-task decode caches."""
+    if w is None:
+        return np.zeros((0, 4), dtype=np.float64)
+    g = wkb.loads(bytes(w))
+    return np.ascontiguousarray(
+        predicates.segments_of_rings(core.all_rings(g)), dtype=np.float64)
 
-    The stored WKB is the region clipped to the CLIP_EPS-expanded tile
-    rect (tiler.clip_geom_to_cell), so its rings also run ALONG the
-    expanded window: closure edges, plus Sutherland–Hodgman bridge
-    runs that connect disconnected clip pieces and can lie OUTSIDE the
-    region (measured on the reference province file: a coastal cell
-    with islands put a bridge corner 785 m from an offshore probe
-    whose true boundary distance is 1459.86 m). Zero width keeps
-    containment parity and overlay areas exact, but a nearest-segment
-    distance must never see them.
 
-    Window coordinates were ASSIGNED at clip time (minx − CLIP_EPS
-    etc. computed from the same column values stored on the tile row),
-    so exact float equality identifies every window run. A true
-    boundary segment cannot sit on the expanded window line (its
-    source vertex would need to be exactly CLIP_EPS off a gridline),
-    and even then the segment would survive in the neighbouring cell's
-    tile, whose window lines differ — the per-region minimum across
-    candidate tiles is unaffected."""
-    segs = predicates.segments_of_rings(core.all_rings(g))
-    if not len(segs):
-        return segs
-    wx0 = minx - tiler.CLIP_EPS
-    wy0 = miny - tiler.CLIP_EPS
-    wx1 = maxx + tiler.CLIP_EPS
-    wy1 = maxy + tiler.CLIP_EPS
-    x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
+def _tile_index(cell, region, kind, minx, miny, maxx, maxy, segs: list,
+                deep=None) -> dict:
+    """The boundary-index layout of a set of kind≠1 tiles, built from
+    per-tile arrays and `segs[i]`, tile i's (n, 4) ring segments
+    (`_tile_segs`). Both regimes build it here: `_boundary_index`
+    builds it once over every boundary tile and broadcasts it, and the
+    join kernels build a batch-local copy from the tile rows each
+    Arrow batch carries (`_batch_tile_index`), so every kernel reads
+    the same arrays.
+
+    Tiles sort by (cell, region, minx bits, miny bits); input already
+    in that order with unique keys keeps its positions. The layout:
+    sorted unique `cells` with per-cell tile ranges `cell_ptr`;
+    per-tile region/kind/rect (and deep when given); the raw closed
+    ring segments X1..Y2 in `seg_ptr` ranges with the point refine's
+    derived terms YDS/DX/LN/DEG; and the window-run-filtered segments
+    FX1..FY2 in `fseg_ptr` ranges for DISTANCE use.
+
+    Why two segment sets: a stored tile is the region clipped to the
+    CLIP_EPS-expanded tile rect (tiler.clip_geom_to_cell), so its rings
+    also run ALONG the expanded window — closure edges, plus
+    Sutherland–Hodgman bridge runs that can lie OUTSIDE the region
+    (measured on the reference province file: a bridge corner 785 m
+    from an offshore probe whose true boundary distance is 1459.86 m).
+    Zero width keeps containment parity exact, so the raw rings stay
+    for parity, but a nearest distance must never see them. Window
+    coordinates were ASSIGNED at clip time from the same column values
+    stored on the tile row, so exact float equality identifies every
+    window run; a true boundary segment on the window line would still
+    survive in the neighbouring cell's tile, so per-region minima are
+    unaffected."""
+    cell = np.asarray(cell, dtype=np.int64)
+    region = np.asarray(region, dtype=np.int64)
+    kind = np.asarray(kind, dtype=np.int64)
+    rect = {k: np.ascontiguousarray(v, dtype=np.float64) for k, v in
+            (("minx", minx), ("miny", miny), ("maxx", maxx), ("maxy", maxy))}
+    order = np.lexsort((rect["miny"].view(np.int64),
+                        rect["minx"].view(np.int64), region, cell))
+    cell, region, kind = cell[order], region[order], kind[order]
+    rect = {k: v[order] for k, v in rect.items()}
+    seg_len = np.fromiter((len(segs[i]) for i in order), dtype=np.int64,
+                          count=len(order))
+    seg_ptr = np.zeros(len(order) + 1, dtype=np.int64)
+    np.cumsum(seg_len, out=seg_ptr[1:])
+    S = (np.concatenate([segs[i] for i in order]) if len(order)
+         else np.zeros((0, 4), dtype=np.float64))
+    x1, y1, x2, y2 = (np.ascontiguousarray(S[:, k]) for k in range(4))
+    yd = y2 - y1
+    yds = np.where(yd == 0, 1.0, yd)
+    dx = x2 - x1
+    ln = np.hypot(dx, yd)
+    degen = ln == 0
+    ln = np.where(degen, 1.0, ln)
+    cells, first = np.unique(cell, return_index=True)
+    cell_ptr = np.append(first, len(cell)).astype(np.int64)
+    ntiles = len(cell)
+    tile_of_seg = np.repeat(np.arange(ntiles, dtype=np.int64), seg_len)
+    wx0 = (rect["minx"] - tiler.CLIP_EPS)[tile_of_seg]
+    wy0 = (rect["miny"] - tiler.CLIP_EPS)[tile_of_seg]
+    wx1 = (rect["maxx"] + tiler.CLIP_EPS)[tile_of_seg]
+    wy1 = (rect["maxy"] + tiler.CLIP_EPS)[tile_of_seg]
     on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
               | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
-    return segs[~on_win]
+    fkeep = ~on_win
+    fcnt = np.bincount(tile_of_seg[fkeep], minlength=ntiles)
+    fseg_ptr = np.zeros(ntiles + 1, dtype=np.int64)
+    np.cumsum(fcnt, out=fseg_ptr[1:])
+    idx = {
+        "cells": cells, "cell_ptr": cell_ptr,
+        "region": region, "kind": kind, **rect,
+        "seg_ptr": seg_ptr,
+        "X1": x1, "Y1": y1, "X2": x2, "Y2": y2,
+        "YDS": yds, "DX": dx, "LN": ln, "DEG": degen,
+        "fseg_ptr": fseg_ptr,
+        "FX1": x1[fkeep], "FY1": y1[fkeep],
+        "FX2": x2[fkeep], "FY2": y2[fkeep],
+    }
+    if deep is not None:
+        idx["deep"] = np.asarray(deep, dtype=np.int64)[order]
+    return idx
+
+
+def _batch_tile_index(pdf: pd.DataFrame, cache: dict):
+    """Batch-local `_tile_index` of the tile rows one join-regime Arrow
+    batch carries (cell_id, region_id, kind, minx..maxy, tile_wkb and
+    optionally deep per row, tiles repeated across rows), and each
+    row's tile position in it. `cache` maps a tile key to its decoded
+    segments for the task's lifetime, so each tile decodes once per
+    task; only kind-0 tiles decode (a kind-2 sub-cell is its rect)."""
+    n = len(pdf)
+    cid = pdf["cell_id"].to_numpy().astype(np.int64)
+    rid = pdf["region_id"].to_numpy().astype(np.int64)
+    kind = pdf["kind"].to_numpy().astype(np.int64)
+    rect = [pdf[k].to_numpy(dtype=np.float64)
+            for k in ("minx", "miny", "maxx", "maxy")]
+    xb, yb = rect[0].view(np.int64), rect[1].view(np.int64)
+    order = np.lexsort((yb, xb, rid, cid))
+    new = np.ones(n, dtype=bool)
+    o1, o0 = order[1:], order[:-1]
+    new[1:] = ((cid[o1] != cid[o0]) | (rid[o1] != rid[o0])
+               | (xb[o1] != xb[o0]) | (yb[o1] != yb[o0]))
+    tile = np.empty(n, dtype=np.int64)
+    tile[order] = np.cumsum(new) - 1
+    first = order[new]
+    wkbs = pdf["tile_wkb"].to_numpy()
+    segs = []
+    for r in first:
+        key = (cid[r], rid[r], xb[r], yb[r])
+        s = cache.get(key)
+        if s is None:
+            s = cache[key] = _tile_segs(wkbs[r] if kind[r] == 0 else None)
+        segs.append(s)
+    deep = pdf["deep"].to_numpy()[first] if "deep" in pdf else None
+    I = _tile_index(cid[first], rid[first], kind[first],
+                    *(v[first] for v in rect), segs, deep)
+    return I, tile
 
 
 def _refine_hav_on_segments(sega: np.ndarray, px: np.ndarray,
@@ -94,27 +188,6 @@ def _refine_hav_on_segments(sega: np.ndarray, px: np.ndarray,
     Y = sega[:, 1][:, None] + t * (sega[:, 3] - sega[:, 1])[:, None]
     D = np.asarray(distance.haversine(X, Y, px[:, None], py[:, None]))
     return D.min(axis=1)
-
-
-def _best_segment_by_hav_proxy(px: np.ndarray, py: np.ndarray,
-                               segs: np.ndarray) -> np.ndarray:
-    """Per point, the segment index minimizing a 3-point HAVERSINE
-    proxy (both endpoints + midpoint) over ALL of a tile's segments —
-    the geodesic mode's third winning-segment candidate. The degree
-    metrics' argmin can land on the wrong segment within a tile at
-    planetary range (measured 25 km high at 2.5 Mm toward South
-    America from 49°S); selecting directly by sampled meters bounds
-    the miss by the 3-point sampling error, (seglen/4)²/(2·distance) —
-    centimetres for ~20 km segments at Mm range."""
-    ax, ay, bx, by = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
-    mx, my = (ax + bx) / 2.0, (ay + by) / 2.0
-    P, Q = px[:, None], py[:, None]
-    d = np.minimum(
-        np.minimum(
-            np.asarray(distance.haversine(ax[None, :], ay[None, :], P, Q)),
-            np.asarray(distance.haversine(bx[None, :], by[None, :], P, Q))),
-        np.asarray(distance.haversine(mx[None, :], my[None, :], P, Q)))
-    return d.argmin(axis=1)
 
 
 def _circle_cell_cover(px: np.ndarray, py: np.ndarray,
@@ -237,53 +310,15 @@ def _ambiguous_circle_keep(ppx, ppy, prb, prc,
     return out
 
 
-def _refine_csr(ents: list, starts: np.ndarray, ends: np.ndarray,
-                px0: np.ndarray, py0: np.ndarray) -> np.ndarray:
-    """Many-tiny-tiles refine: decompose this batch's (point, tile)
-    pairs into one ragged CSR (pair, segment) row list — row r tests
-    sorted-pair `row_pair[r]` against its tile's segment `idx[r]` — and
-    run the crossing-parity + on-segment kernel ONCE, reducing back per
-    pair with bincount. Identical arithmetic to the per-tile broadcast
-    loop (EPS, degenerate-segment handling included); only the loop
-    structure differs. Returns hit flags aligned with the sorted pairs."""
-    npairs = len(px0)
-    lens = np.fromiter((len(e[0]) for e in ents), dtype=np.int64,
-                       count=len(ents))
-    X1 = np.concatenate([e[0] for e in ents])
-    Y1 = np.concatenate([e[1] for e in ents])
-    X2 = np.concatenate([e[2] for e in ents])
-    Y2 = np.concatenate([e[3] for e in ents])
-    YDS = np.concatenate([e[4] for e in ents])
-    DX = np.concatenate([e[5] for e in ents])
-    LN = np.concatenate([e[6] for e in ents])
-    DEG = np.concatenate([e[7] for e in ents])
-    seg_off = np.zeros(len(ents), dtype=np.int64)
-    np.cumsum(lens[:-1], out=seg_off[1:])
-    # per (sorted) pair: its group's segment count and offset
-    npair_g = ends - starts
-    pair_grp = np.repeat(np.arange(len(ents), dtype=np.int64), npair_g)
-    segcnt = lens[pair_grp]
-    tot = int(segcnt.sum())
-    row_pair = np.repeat(np.arange(npairs, dtype=np.int64), segcnt)
-    row_start = np.zeros(npairs, dtype=np.int64)
-    np.cumsum(segcnt[:-1], out=row_start[1:])
-    idx = (np.arange(tot, dtype=np.int64)
-           - np.repeat(row_start, segcnt)
-           + np.repeat(seg_off[pair_grp], segcnt))
-    return _pair_hits_flat(X1[idx], Y1[idx], X2[idx], Y2[idx],
-                           YDS[idx], DX[idx], LN[idx], DEG[idx],
-                           row_pair, px0[row_pair], py0[row_pair], npairs)
-
-
 def _pair_hits_flat(x1, y1, x2, y2, yds, dxv, ln, degen,
                     row_pair, p, q, npairs: int) -> np.ndarray:
     """Shared flat (pair, segment)-row kernel: every input array is one
     value per segment ROW (already gathered), `row_pair` maps each row
     to its pair, `p`/`q` are the pair's point repeated per row. Crossing
     parity (half-open `p < xint`) reduces per pair with bincount; EPS
-    on-segment acceptance ORs in. Arithmetic is pinned bit-for-bit by
-    tests/test_refine_csr.py — both the CSR refine and the broadcast
-    boundary-index refine call exactly this."""
+    on-segment acceptance ORs in. `_pair_hits` is its one caller, for
+    both the index and the join refine; tests/test_refine_csr.py pins
+    it to the per-tile (points × segments) reference arithmetic."""
     cond = (y1 > q) != (y2 > q)
     xint = x1 + (q - y1) / yds * dxv
     crossing = cond & (p < xint)
@@ -312,20 +347,23 @@ def _flat_seg_argmins(ppx: np.ndarray, ppy: np.ndarray,
     """Per (point, tile) PAIR, the degree-planar and the cos(lat)-scaled
     nearest point on the pair's segment slice `s0[i]:s0[i]+scnt[i]` of
     the flat segment arrays (every scnt ≥ 1), computed flat over all
-    (pair, segment) rows: min + first-argmin via reduceat. This is the
-    arithmetic of predicates.nearest_on_segments_idx /
-    nearest_on_segments_scaled_idx formula for formula, with the same
-    first-hit tie-break, so the index kernels stay bit-identical to the
-    per-tile join and cogroup kernels. Both broadcast-index Q2 kernels
-    (finite tolerance and −1) call exactly this.
+    (pair, segment) rows: min + first-argmin via reduceat. Every Q2
+    kernel, in both regimes, takes its argmins from here;
+    tests/test_flat_seg_argmins.py pins it to the per-tile reference
+    formulas predicates.nearest_on_segments_idx / _scaled_idx (same
+    first-hit tie-break).
 
     ppx/ppy: the pair's probe (already antimeridian-unrolled where the
     caller needs it). Returns (nx, ny, d2, sx, sy, d2s, jn, js): the
     planar winner and its squared degree distance, the scaled winner
     and its squared scaled distance, and the flat indices of the two
     winning segments. hav_proxy=True appends the flat index of the
-    geodesic mode's third winner, _best_segment_by_hav_proxy's
-    3-point haversine argmin over the same rows."""
+    geodesic mode's third winner: per pair, the segment minimizing a
+    3-point HAVERSINE proxy (both endpoints + midpoint). The degree
+    metrics' argmin can land on the wrong segment within a tile at
+    planetary range (measured 25 km high at 2.5 Mm toward South America
+    from 49°S); selecting by sampled meters bounds the miss by the
+    3-point sampling error, (seglen/4)²/(2·distance)."""
     starts = np.zeros(len(ppx), dtype=np.int64)
     np.cumsum(scnt[:-1], out=starts[1:])
     srep = np.repeat(np.arange(len(ppx), dtype=np.int64), scnt)
@@ -376,143 +414,6 @@ def _flat_seg_argmins(ppx: np.ndarray, ppy: np.ndarray,
     return out + (sidx[starts + np.minimum.reduceat(bigp, starts)],)
 
 
-def _make_refine_fn(id_cols: tuple[str, ...]):
-    """Build the exact point-refine UDF — the JTS
-    `subGeom.intersects(point)` analog
-    (/root/reference/AreaCityQuery.java:260-263) — FULLY vectorized:
-    no per-group Python loop. Each Arrow batch is one flat (point, tile)
-    pair list straight from the equi-join; kind=2 rows reduce to a
-    column-wise rect test, and kind=0 rows expand into a ragged
-    (pair → tile segment) CSR layout tested with a single broadcast
-    crossing/on-segment kernel, reduced back per pair with bincount.
-    Tile WKB decodes are cached across batches for the task's lifetime.
-    `id_cols` pass through opaquely (point_id, or (doc_id, span_idx)
-    for the docs-table join)."""
-    id_list = list(id_cols)
-
-    def _empty(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf[id_list].iloc[:0].copy()
-        out["region_id"] = pd.Series([], dtype="int64")
-        return out
-
-    def _refine_point_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # tile registry: (cell_id, region_id, minx-bits) → column-major
-        # segment arrays; cached for the task's lifetime. The upstream
-        # repartition by cell keeps each tile on one task, so each WKB
-        # decodes once per job, and the per-tile (points × segments)
-        # broadcast keeps the segment arrays L1-resident — the refine
-        # streams only the (contiguous) point slices from memory.
-        registry: dict[tuple, tuple] = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                yield _empty(pdf)
-                continue
-            kind = pdf["kind"].to_numpy()
-            px_all = np.asarray(pdf["lng"], dtype=np.float64)
-            py_all = np.asarray(pdf["lat"], dtype=np.float64)
-            hit_all = np.zeros(len(pdf), dtype=bool)
-
-            # ---- kind=2 interior sub-cells: one column-wise rect test
-            m2 = kind == 2
-            if m2.any():
-                hit_all[m2] = (
-                    (px_all[m2] >= pdf["minx"].to_numpy()[m2])
-                    & (px_all[m2] < pdf["maxx"].to_numpy()[m2])
-                    & (py_all[m2] >= pdf["miny"].to_numpy()[m2])
-                    & (py_all[m2] < pdf["maxy"].to_numpy()[m2])
-                )
-
-            # ---- kind=0 boundary tiles: group rows per tile, test each
-            # tile's points in one (points × segments) broadcast
-            m0 = np.nonzero(kind == 0)[0]
-            if len(m0):
-                cid = pdf["cell_id"].to_numpy()[m0]
-                rid = pdf["region_id"].to_numpy()[m0]
-                mnx_bits = pdf["minx"].to_numpy()[m0].view(np.int64)
-                mny_bits = pdf["miny"].to_numpy()[m0].view(np.int64)
-                order = np.lexsort((mny_bits, mnx_bits, rid, cid))
-                cs, rs = cid[order], rid[order]
-                xs, ys = mnx_bits[order], mny_bits[order]
-                new_grp = np.empty(len(m0), dtype=bool)
-                new_grp[0] = True
-                new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                              (np.diff(xs) != 0) | (np.diff(ys) != 0)
-                starts = np.nonzero(new_grp)[0]
-                ends = np.append(starts[1:], len(m0))
-                px0 = px_all[m0][order]
-                py0 = py_all[m0][order]
-                hit0 = np.zeros(len(m0), dtype=bool)
-                wkb_col = pdf["tile_wkb"].to_numpy()[m0][order]
-                ents = []
-                for s0 in starts:
-                    key = (cs[s0], rs[s0], xs[s0], ys[s0])
-                    ent = registry.get(key)
-                    if ent is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        segs = predicates.segments_of_rings(core.all_rings(g))
-                        x1, y1, x2, y2 = (np.ascontiguousarray(segs[:, k])
-                                          for k in range(4))
-                        yd = y2 - y1
-                        yds = np.where(yd == 0, 1.0, yd)
-                        dx = x2 - x1
-                        ln = np.hypot(dx, yd)
-                        degen = ln == 0
-                        ln = np.where(degen, 1.0, ln)
-                        ent = (x1, y1, x2, y2, yds, dx, ln, degen)
-                        registry[key] = ent
-                    ents.append(ent)
-                # two regimes (same predicate, same arithmetic):
-                #  - FEW big tiles (sparse boundary sets, e.g. 34
-                #    provinces): per-tile (points × segments) broadcast —
-                #    the tile's segment arrays stay L1-resident while a
-                #    long contiguous point slice streams through.
-                #  - MANY tiny tiles (reference-density sets: the dense
-                #    fixture joins ~9k groups of ~7 points × ~3 segments
-                #    per Arrow batch): the per-group Python loop costs
-                #    more than the math — decompose into one ragged CSR
-                #    (pair, segment) row list and run ONE kernel per
-                #    batch, reducing parity/on-segment back per pair
-                #    with bincount (the Q3 refine's layout).
-                if len(starts) > 64:
-                    hit0 = _refine_csr(ents, starts, ends, px0, py0)
-                else:
-                    for gi, (s0, s1) in enumerate(zip(starts, ends)):
-                        x1, y1, x2, y2, yds, dx, ln, degen = ents[gi]
-                        p = px0[s0:s1][:, None]
-                        q = py0[s0:s1][:, None]
-                        cond = (y1[None, :] > q) != (y2[None, :] > q)
-                        xint = x1[None, :] + (q - y1[None, :]) / yds[None, :] * dx[None, :]
-                        crossing = cond & (p < xint)
-                        parity = (crossing.sum(axis=1) % 2) == 1
-                        qx = p - x1[None, :]
-                        qy = q - y1[None, :]
-                        crossp = np.abs(qx * (y2 - y1)[None, :] - qy * dx[None, :]) / ln[None, :]
-                        if degen.any():
-                            crossp = np.where(degen[None, :], np.hypot(qx, qy), crossp)
-                        t_par = (qx * dx[None, :] + qy * (y2 - y1)[None, :]) / (ln * ln)[None, :]
-                        if degen.any():
-                            t_par = np.where(degen[None, :], 0.0, t_par)
-                        on = (crossp <= predicates.EPS) & (t_par >= -predicates.EPS) \
-                            & (t_par <= 1 + predicates.EPS)
-                        hit0[s0:s1] = parity | on.any(axis=1)
-                back = np.empty(len(m0), dtype=np.int64)
-                back[order] = np.arange(len(m0))
-                hit_all[m0] = hit0[back]
-
-            if not hit_all.any():
-                yield _empty(pdf)
-                continue
-            out = pdf.loc[hit_all, id_list + ["region_id"]].copy()
-            # same (point, region) may hit via several sub-tiles under one
-            # base key — dedup within the batch (such pairs sit within one
-            # probe row's join fan-out, which Arrow keeps in one batch)
-            out = out.drop_duplicates(id_list + ["region_id"])
-            out["region_id"] = out["region_id"].astype("int64")
-            yield out
-
-    return _refine_point_batches
-
-
 def _csr_lookup(keys: np.ndarray, ptr: np.ndarray, q: np.ndarray):
     """The one CSR lookup every broadcast-index kernel runs: all
     (query, entry) pairs with q[i] == keys[s] and entry in
@@ -537,24 +438,17 @@ def _csr_lookup(keys: np.ndarray, ptr: np.ndarray, q: np.ndarray):
     return np.repeat(qm, cnt), entry, np.repeat(s, cnt)
 
 
-def _index_refine_hits(I: dict, cid: np.ndarray, px: np.ndarray,
-                       py: np.ndarray, keep: np.ndarray | None = None):
-    """Q1 boundary refine of one batch against the boundary index `I`:
-    pairs form by `_csr_lookup` of each probe's cell, kind-2 sub-cells
-    take the rect test, kind-0 tiles the flat crossing-parity +
-    on-segment kernel (`_pair_hits_flat`, bit-identical to the join
-    refine's). `keep` is the sorted keep-region array under `where`.
-    Returns (row, region) hits, deduped — several sub-tiles of one
-    region in one cell may all accept the same point — and sorted by
-    (row, region)."""
-    rows, tiles, _ = _csr_lookup(I["cells"], I["cell_ptr"], cid)
-    if keep is not None:
-        km = _in_sorted(I["region"][tiles], keep)
-        rows, tiles = rows[km], tiles[km]
-    ppx = px[rows]
-    ppy = py[rows]
+def _pair_hits(I: dict, tiles: np.ndarray, ppx: np.ndarray,
+               ppy: np.ndarray) -> np.ndarray:
+    """Q1 point-in-tile test of (probe, tile) pairs — the JTS
+    `subGeom.intersects(point)` analog (AreaCityQuery.java:260-263):
+    `tiles` indexes the boundary-index layout `I` (broadcast or
+    batch-local), ppx/ppy are each pair's probe. kind-2 sub-cells take
+    the half-open rect test, kind-0 tiles the flat crossing-parity +
+    on-segment kernel (`_pair_hits_flat`) over their raw closed rings.
+    Returns one hit flag per pair."""
     kindt = I["kind"][tiles]
-    hit = np.zeros(len(rows), dtype=bool)
+    hit = np.zeros(len(tiles), dtype=bool)
     m2 = kindt == 2
     if m2.any():
         t2 = tiles[m2]
@@ -576,6 +470,22 @@ def _index_refine_hits(I: dict, cid: np.ndarray, px: np.ndarray,
             I["X1"][sidx], I["Y1"][sidx], I["X2"][sidx], I["Y2"][sidx],
             I["YDS"][sidx], I["DX"][sidx], I["LN"][sidx], I["DEG"][sidx],
             row_pair, p0x[row_pair], p0y[row_pair], npairs0)
+    return hit
+
+
+def _index_refine_hits(I: dict, cid: np.ndarray, px: np.ndarray,
+                       py: np.ndarray, keep: np.ndarray | None = None):
+    """Q1 boundary refine of one batch against the boundary index `I`:
+    pairs form by `_csr_lookup` of each probe's cell and score by
+    `_pair_hits`. `keep` is the sorted keep-region array under `where`.
+    Returns (row, region) hits, deduped — several sub-tiles of one
+    region in one cell may all accept the same point — and sorted by
+    (row, region)."""
+    rows, tiles, _ = _csr_lookup(I["cells"], I["cell_ptr"], cid)
+    if keep is not None:
+        km = _in_sorted(I["region"][tiles], keep)
+        rows, tiles = rows[km], tiles[km]
+    hit = _pair_hits(I, tiles, px[rows], py[rows])
     hr = rows[hit]
     hg = I["region"][tiles[hit]]
     if len(hr) == 0:
@@ -606,38 +516,45 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray,
     """Finite-tolerance scoring of one batch of probes against the
     boundary index (≙ the reference's per-feature 24-gon scan,
     AreaCityQuery.java:102-163): cover cells of each probe's 24-gon
-    (`_circle_cell_cover`), candidate kind-0 tiles by `_csr_lookup`,
-    per-(probe, tile) planar and scaled nearest flat by
-    `_flat_seg_argmins` over the window-run-filtered segments, then
-    the join path's inscribed/escribed radius gates + exact 24-gon
-    test and haversine at the better argmin under the 1e-12 guard —
-    row for row the cover-join dist_fn's arithmetic. Probes must be
-    finite. Returns (probe index, tile index, dist_m) per kept
-    (probe, tile) pair."""
-    e = np.empty(0, dtype=np.int64)
+    (`_circle_cell_cover`), candidate kind-0 tiles by `_csr_lookup`
+    (`keep` = the in-kernel twin of _tiles_for's LEFT SEMI region
+    filter), scored by `_tolerance_scores`. Probes must be finite."""
     if not len(px):
+        e = np.empty(0, dtype=np.int64)
         return e, e, np.empty(0)
-    fptr = I["fseg_ptr"]
-    FX1, FY1, FX2, FY2 = I["FX1"], I["FY1"], I["FX2"], I["FY2"]
     rep, cells = _circle_cell_cover(px, py, tol, base_res)
     q, tix, _ = _csr_lookup(I["cells"], I["cell_ptr"], cells)
-    prep = rep[q]
-    scnt = fptr[tix + 1] - fptr[tix]
-    # boundary tiles only, and (as dist_fn) skip tiles with no
-    # true-boundary segments after window-run filtering; `keep` = the
-    # in-kernel twin of _tiles_for's LEFT SEMI region filter
-    m = (I["kind"][tix] == 0) & (scnt > 0)
+    m = I["kind"][tix] == 0
     if keep is not None:
         m &= _in_sorted(I["region"][tix], keep)
+    return _tolerance_scores(I, px, py, rep[q][m], tix[m], tol)
+
+
+def _tolerance_scores(I: dict, px: np.ndarray, py: np.ndarray,
+                      prep: np.ndarray, tix: np.ndarray, tol: float):
+    """Finite-tolerance distance of (probe, tile) pairs: probe prep[i]
+    of px/py against kind-0 tile tix[i] of the boundary-index layout
+    `I` (broadcast or batch-local). Tiles without true-boundary
+    segments after window-run filtering are skipped; per pair the
+    planar and scaled nearest come flat from `_flat_seg_argmins`, the
+    inscribed/escribed 24-gon radius gates and the exact 24-gon test
+    (`_ambiguous_circle_keep`) decide membership, and the distance is
+    haversine at the better argmin under the 1e-12 guard. Returns
+    (probe index, tile index, dist_m) per kept pair."""
+    fptr = I["fseg_ptr"]
+    FX1, FY1, FX2, FY2 = I["FX1"], I["FY1"], I["FX2"], I["FY2"]
+    scnt = fptr[tix + 1] - fptr[tix]
+    m = scnt > 0
     prep, tix, scnt = prep[m], tix[m], scnt[m]
     if not len(prep):
+        e = np.empty(0, dtype=np.int64)
         return e, e, np.empty(0)
     s0 = fptr[tix]
     nx, ny, dmin2, sxx, syy, _, _, _ = _flat_seg_argmins(
         px[prep], py[prep], s0, scnt, FX1, FY1, FX2, FY2)
     d_planar = np.sqrt(dmin2)
     # per-point circle radii — the exact CreateSimpleCircle
-    # step-ladder arithmetic (identical to dist_fn's)
+    # step-ladder arithmetic
     km = tol / 1000.0
     a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
     b = np.asarray(distance.haversine(px, py, px + a, py))
@@ -651,6 +568,9 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray,
     ok = definite.copy()
     amb = np.nonzero(~definite & ~impossible)[0]
     if len(amb):
+        # 24-gon vs the FILTERED piece boundary: the probe is outside
+        # every candidate region (it missed Q1 under the same `where`),
+        # so circle ∩ region ≠ ∅ ⟺ the circle touches true boundary
         pa = prep[amb]
         ok[amb] = _ambiguous_circle_keep(
             px[pa], py[pa], rb[pa], rc[pa],
@@ -658,10 +578,141 @@ def _tolerance_pairs(I: dict, px: np.ndarray, py: np.ndarray,
     kp = prep[ok]
     d0 = np.asarray(distance.haversine(nx[ok], ny[ok], px[kp], py[kp]))
     d1 = np.asarray(distance.haversine(sxx[ok], syy[ok], px[kp], py[kp]))
-    # same genuine-improvement guard as the join path (bit-identity
-    # across paths and with pre-r5 gates)
+    # the scaled candidate wins only on a GENUINE improvement (rel
+    # 1e-12): for axis-aligned segments both argmins are the same
+    # geometric point up to fp ulps, and the guard keeps the pre-r5 bit
+    # pattern (gate oracle hashes)
     d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
     return kp, tix[ok], np.asarray(d, dtype=np.float64)
+
+
+def _pair_argmins(I: dict, ppx: np.ndarray, ppy: np.ndarray,
+                  tix: np.ndarray, refine: bool, max_rows: int):
+    """tolerance −1 per-(probe, tile) candidates: for each pair (probe
+    ppx/ppy, tile tix with window-filtered segments in `I`) both
+    argmins from `_flat_seg_argmins` on the antimeridian-unrolled
+    probe, in pieces of ≤ `max_rows` (pair, segment) rows. Returns
+    (nx, ny, d2, sx, sy, d2s, v); v (geodesic mode only, else None) is
+    the pair's minimum in METERS: haversine at both argmins plus 65
+    samples along the three winning segments — a degree metric can
+    pick the wrong tile at planetary range, so geodesic mode
+    min-reduces meters across tiles instead."""
+    fptr = I["fseg_ptr"]
+    FX1, FY1, FX2, FY2 = I["FX1"], I["FY1"], I["FX2"], I["FY2"]
+    scnt = fptr[tix + 1] - fptr[tix]
+    cxc = (I["minx"][tix] + I["maxx"][tix]) / 2.0
+    cum = np.cumsum(scnt)
+    cuts = [0]
+    while cuts[-1] < len(tix):  # ≤ max_rows rows per piece
+        base = cum[cuts[-1] - 1] if cuts[-1] else 0
+        cuts.append(max(cuts[-1] + 1, int(np.searchsorted(
+            cum, base + max_rows, side="right"))))
+    res = []
+    for a, b in zip(cuts[:-1], cuts[1:]):
+        px, py = ppx[a:b], ppy[a:b]
+        # antimeridian unroll: shift the PROBE a whole number of turns
+        # to within 180° of the tile for the argmins only (haversine is
+        # 360°-periodic; round()==0 → pxa == px bit-for-bit for every
+        # in-range pair)
+        pxa = px - 360.0 * np.round((px - cxc[a:b]) / 360.0)
+        r = _flat_seg_argmins(pxa, py, fptr[tix[a:b]], scnt[a:b],
+                              FX1, FY1, FX2, FY2, hav_proxy=refine)
+        v = None
+        if refine:
+            v = np.minimum(
+                np.asarray(distance.haversine(r[0], r[1], px, py)),
+                np.asarray(distance.haversine(r[3], r[4], px, py)))
+            for j in (r[8], r[6], r[7]):
+                for c0 in range(0, len(j), 8192):
+                    sl = slice(c0, c0 + 8192)
+                    js = j[sl]
+                    np.minimum(v[sl], _refine_hav_on_segments(
+                        np.stack([FX1[js], FY1[js], FX2[js], FY2[js]],
+                                 axis=1), px[sl], py[sl]), out=v[sl])
+        res.append(r[:6] + (v,))
+    out = [np.concatenate([x[i] for x in res]) if res else np.empty(0)
+           for i in range(6)]
+    return (*out, np.concatenate([x[6] for x in res]) if refine and res
+            else None)
+
+
+def _nearest_per_region(I: dict, px: np.ndarray, py: np.ndarray,
+                        msk: np.ndarray, keep: np.ndarray | None,
+                        refine: bool, max_rows: int):
+    """tolerance −1 exact scan of points px/py (unique per call) against
+    the boundary-index layout `I` (broadcast or batch-local): each point
+    pairs with every kind-0 tile with window-filtered segments of the
+    deeps in its bit mask `msk` (region in `keep` under `where`). Per
+    (point, tile) the candidates come from `_pair_argmins`; per (point,
+    region) each metric min-reduces on its own (first tile in index
+    order on ties), then haversine at the two winners under the 1e-12
+    guard decides; geodesic mode min-reduces the meters minimum
+    instead. Returns (point index, region, dist_m)."""
+    region, deep = I["region"], I["deep"]
+    fptr = I["fseg_ptr"]
+    fcnt = fptr[1:] - fptr[:-1]
+    cand = (I["kind"] == 0) & (fcnt > 0)
+    if keep is not None:
+        cand &= _in_sorted(region, keep)
+
+    def chunk(px, py, tl, gs):
+        """(point, region, dist) rows for points px/py against tiles
+        `tl`, grouped by region with group starts `gs`."""
+        P, T = len(px), len(tl)
+        prep = np.repeat(np.arange(P, dtype=np.int64), T)
+        tix = np.tile(tl, P)
+        nx, ny, d2, sx, sy, d2s, v = _pair_argmins(
+            I, px[prep], py[prep], tix, refine, max_rows)
+        # (point, region) groups: every point pairs with the same
+        # region-sorted tile list
+        gst = (np.arange(P, dtype=np.int64)[:, None] * T
+               + gs[None, :]).ravel()
+        gp = np.repeat(np.arange(P, dtype=np.int64), len(gs))
+        rg = np.tile(region[tl[gs]], P)
+        if refine:
+            return gp, rg, np.minimum.reduceat(v, gst)
+        grp = np.repeat(np.arange(len(gst)),
+                        np.diff(np.append(gst, len(tix))))
+        row = np.arange(len(tix), dtype=np.int64)
+
+        def first_min(v):
+            # each metric's own argmin per (point, region), first tile
+            # in index order on ties
+            vmin = np.minimum.reduceat(v, gst)
+            return np.minimum.reduceat(
+                np.where(v == vmin[grp], row, len(row)), gst)
+
+        w = first_min(np.sqrt(d2))
+        ws = first_min(np.sqrt(d2s))
+        d0 = np.asarray(distance.haversine(
+            nx[w], ny[w], px[gp], py[gp]), dtype=np.float64)
+        d1 = np.asarray(distance.haversine(
+            sx[ws], sy[ws], px[gp], py[gp]), dtype=np.float64)
+        # same genuine-improvement guard as the tolerance paths
+        return gp, rg, np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
+
+    out_p, out_r, out_d = [], [], []
+    for m in np.unique(msk):
+        # the mask's tiles, region-sorted (index order within a
+        # region), and each region's first slot
+        tl = np.nonzero(cand & (((m >> deep) & 1) == 1))[0]
+        if not len(tl):
+            continue
+        tl = tl[np.argsort(region[tl], kind="stable")]
+        gs = np.nonzero(np.diff(region[tl], prepend=-1))[0]
+        sel = np.nonzero(msk == m)[0]
+        step = max(1, max_rows // int(fcnt[tl].sum()))
+        for c0 in range(0, len(sel), step):
+            ps = sel[c0:c0 + step]
+            p, rg, d = chunk(px[ps], py[ps], tl, gs)
+            out_p.append(ps[p])
+            out_r.append(rg)
+            out_d.append(d)
+    if not out_p:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, np.empty(0)
+    return (np.concatenate(out_p), np.concatenate(out_r),
+            np.concatenate(out_d).astype(np.float64))
 
 
 def _top_k_per_deep(pid: np.ndarray, region: np.ndarray, deep: np.ndarray,
@@ -714,6 +765,51 @@ def _make_index_refine_fn(id_cols: tuple[str, ...], bc,
             out = pdf.iloc[hr][id_list].copy()
             out["region_id"] = hg.astype("int64")
             yield out
+
+    return fn
+
+
+def _make_join_refine_fn(id_cols: tuple[str, ...]):
+    """Boundary refine for boundary sets past the index budget: each
+    Arrow batch is a flat (point, tile) pair list straight from the
+    equi-join. The batch builds its batch-local tile index
+    (`_batch_tile_index`, tile WKB decoded once per task) and scores
+    every pair with `_pair_hits`, the index refine's arithmetic.
+    `id_cols` pass through opaquely (point_id, or (doc_id, span_idx)
+    for the docs-table join).
+
+    The same (point, region) may hit via several sub-tiles under one
+    base cell, so hits dedup per batch. A probe row's join fan-out is
+    contiguous in the stream but may straddle a batch boundary, so the
+    last probe's rows of each batch are held back and refined with the
+    next batch."""
+    id_list = list(id_cols)
+
+    def refine(pdf: pd.DataFrame, cache: dict) -> pd.DataFrame:
+        I, tile = _batch_tile_index(pdf, cache)
+        hit = _pair_hits(I, tile, pdf["lng"].to_numpy(dtype=np.float64),
+                         pdf["lat"].to_numpy(dtype=np.float64))
+        out = pdf.loc[hit, id_list + ["region_id"]].drop_duplicates()
+        out["region_id"] = out["region_id"].astype("int64")
+        return out
+
+    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache: dict[tuple, np.ndarray] = {}
+        held = None
+        for pdf in it:
+            if held is not None:
+                pdf = pd.concat([held, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            last = np.ones(len(pdf), dtype=bool)
+            for c in id_list:
+                v = pdf[c].to_numpy()
+                last &= v == v[-1]
+            cut = 0 if last.all() else len(pdf) - int(np.argmin(last[::-1]))
+            held = pdf.iloc[cut:]
+            yield refine(pdf.iloc[:cut], cache)
+        if held is not None:
+            yield refine(held, cache)
 
     return fn
 
@@ -951,6 +1047,12 @@ class SpatialEngine:
     # ~30 float64 temporaries per row stay cache-sized (measured ~1.8×
     # faster per point than 2^18 rows on a 4-core host, ~8 MB/worker)
     _FLAT_ROWS = 1 << 15
+    # the (point_id, region_id, dist_m) rows every Q2 distance stage yields
+    _DIST_SCHEMA = StructType([
+        StructField("point_id", LongType()),
+        StructField("region_id", LongType()),
+        StructField("dist_m", DoubleType()),
+    ])
 
     def __init__(
         self,
@@ -1208,11 +1310,9 @@ class SpatialEngine:
 
     def _boundary_index(self) -> tuple | None:
         """Build (once, lazily) the broadcast boundary-tile index:
-        every kind≠1 tile pre-decoded into flat numpy CSR arrays —
-        sorted cell table, per-cell tile ranges, per-tile region/deep/kind/
-        rect/segment ranges, concatenated segment component arrays with
-        the refine kernel's derived terms (yds/dx/ln/degen) computed
-        once at build instead of once per task.
+        every kind≠1 tile pre-decoded into the `_tile_index` layout
+        (flat numpy CSR arrays, the refine kernel's derived terms
+        computed once at build instead of once per task).
 
         Returns (Broadcast, bcells_df) or None when the boundary WKB
         volume exceeds `boundary_index_wkb_bytes` (the join-based
@@ -1245,82 +1345,25 @@ class SpatialEngine:
 
         def extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
-                segs = []
-                for w in pdf["tile_wkb"]:
-                    if w is None:
-                        segs.append(b"")
-                        continue
-                    g = wkb.loads(bytes(w))
-                    s = predicates.segments_of_rings(core.all_rings(g))
-                    segs.append(np.ascontiguousarray(
-                        s, dtype=np.float64).tobytes())
                 out = pdf[["cell_id", "region_id", "deep", "kind",
                            "minx", "miny", "maxx", "maxy"]].copy()
-                out["segs"] = segs
+                out["segs"] = [_tile_segs(w).tobytes()
+                               for w in pdf["tile_wkb"]]
                 yield out
 
         pdf = (tb.select("cell_id", "region_id", "deep", "kind",
                          "minx", "miny", "maxx", "maxy", "tile_wkb")
                .mapInPandas(extract, out_schema).toPandas())
-        cell = pdf["cell_id"].to_numpy().astype(np.int64)
-        region = pdf["region_id"].to_numpy().astype(np.int64)
-        deep = pdf["deep"].to_numpy().astype(np.int64)
-        kind = pdf["kind"].to_numpy().astype(np.int64)
-        rect = {k: pdf[k].to_numpy().astype(np.float64)
-                for k in ("minx", "miny", "maxx", "maxy")}
-        order = np.lexsort((rect["miny"].view(np.int64),
-                            rect["minx"].view(np.int64), region, cell))
-        cell, region = cell[order], region[order]
-        deep, kind = deep[order], kind[order]
-        rect = {k: v[order] for k, v in rect.items()}
-        segs_list = [pdf["segs"].iloc[i] for i in order]
-        seg_len = np.fromiter((len(b) // 32 for b in segs_list),
-                              dtype=np.int64, count=len(segs_list))
-        seg_ptr = np.zeros(len(segs_list) + 1, dtype=np.int64)
-        np.cumsum(seg_len, out=seg_ptr[1:])
-        S = np.frombuffer(b"".join(segs_list), dtype=np.float64)
-        S = S.reshape(-1, 4) if len(S) else S.reshape(0, 4)
-        x1, y1, x2, y2 = (np.ascontiguousarray(S[:, k]) for k in range(4))
-        yd = y2 - y1
-        yds = np.where(yd == 0, 1.0, yd)
-        dx = x2 - x1
-        ln = np.hypot(dx, yd)
-        degen = ln == 0
-        ln = np.where(degen, 1.0, ln)
-        cells, first = np.unique(cell, return_index=True)
-        cell_ptr = np.append(first, len(cell)).astype(np.int64)
-        # window-run-filtered segment CSR for DISTANCE use (the index
-        # twin of _distance_segs: exact float equality against the
-        # per-tile CLIP_EPS-expanded window identifies closure/bridge
-        # runs, which must never feed a nearest-distance). Raw closed
-        # rings above stay for parity/containment.
-        ntiles = len(cell)
-        tile_of_seg = np.repeat(np.arange(ntiles, dtype=np.int64), seg_len)
-        wx0 = (rect["minx"] - tiler.CLIP_EPS)[tile_of_seg]
-        wy0 = (rect["miny"] - tiler.CLIP_EPS)[tile_of_seg]
-        wx1 = (rect["maxx"] + tiler.CLIP_EPS)[tile_of_seg]
-        wy1 = (rect["maxy"] + tiler.CLIP_EPS)[tile_of_seg]
-        on_win = (((x1 == x2) & ((x1 == wx0) | (x1 == wx1)))
-                  | ((y1 == y2) & ((y1 == wy0) | (y1 == wy1))))
-        fkeep = ~on_win
-        fcnt = np.bincount(tile_of_seg[fkeep], minlength=ntiles)
-        fseg_ptr = np.zeros(ntiles + 1, dtype=np.int64)
-        np.cumsum(fcnt, out=fseg_ptr[1:])
-        idx = {
-            "cells": cells, "cell_ptr": cell_ptr,
-            "region": region, "deep": deep, "kind": kind,
-            "minx": rect["minx"], "miny": rect["miny"],
-            "maxx": rect["maxx"], "maxy": rect["maxy"],
-            "seg_ptr": seg_ptr,
-            "X1": x1, "Y1": y1, "X2": x2, "Y2": y2,
-            "YDS": yds, "DX": dx, "LN": ln, "DEG": degen,
-            "fseg_ptr": fseg_ptr,
-            "FX1": x1[fkeep], "FY1": y1[fkeep],
-            "FX2": x2[fkeep], "FY2": y2[fkeep],
-        }
+        idx = _tile_index(
+            pdf["cell_id"].to_numpy(), pdf["region_id"].to_numpy(),
+            pdf["kind"].to_numpy(),
+            *(pdf[k].to_numpy() for k in ("minx", "miny", "maxx", "maxy")),
+            [np.frombuffer(b, dtype=np.float64).reshape(-1, 4)
+             for b in pdf["segs"]],
+            deep=pdf["deep"].to_numpy())
         bc = self.spark.sparkContext.broadcast(idx)
-        bcells = self.spark.createDataFrame(
-            pd.DataFrame({"cell_id": cells})).localCheckpoint(eager=True)
+        bcells = self.spark.createDataFrame(pd.DataFrame(
+            {"cell_id": idx["cells"]})).localCheckpoint(eager=True)
         self._bindex = (bc, bcells)
         return self._bindex
 
@@ -1524,7 +1567,7 @@ class SpatialEngine:
                 + [StructField("region_id", LongType())]
             )
             refined = boundary.mapInPandas(
-                _make_refine_fn(id_cols), refine_schema)
+                _make_join_refine_fn(id_cols), refine_schema)
         if observers is not None:
             obs_i, obs_r = observers
             interior = interior.observe(obs_i, F.count(F.lit(1)).alias("rows"))
@@ -1776,7 +1819,6 @@ class SpatialEngine:
     def query_points_with_tolerance(
         self, points: DataFrame, tolerance_m: float,
         where: str | None = None, lng="lng", lat="lat", k: int = 1,
-        cover_res: int | None = None,
     ) -> DataFrame:
         """Q2 — nearest-boundary fallback (≙ QueryPointWithTolerance,
         /root/reference/AreaCityQuery.java:102-163).
@@ -1793,7 +1835,7 @@ class SpatialEngine:
 
         Plans — `last_q2_iter_stats["base_path"]` records which ran:
         "index" while the boundary and interior indexes both fit their
-        budgets (and cover_res is base_res). A finite tolerance (or 0)
+        budgets. A finite tolerance (or 0)
         is then ONE mapInPandas (`_make_q2_index_fn`: Q1 hit test,
         tolerance distances and per-deep top-k in one Arrow pass) plus
         the broadcast props join — no checkpoint, no shuffle; −1 takes
@@ -1806,30 +1848,11 @@ class SpatialEngine:
             F.col("point_id"), F.col(lng).alias("lng"), F.col(lat).alias("lat")
         )
         base_res = self.base_res
-        # cover_res knob: covering the 24-gon bbox at a res coarser
-        # than base_res shrinks the cover shuffle O((tol/cell)²)-
-        # fold but multiplies the (probe, tile) candidate pairs the
-        # dist_fn gates must score. MEASURED on the dense fixture
-        # (25 km, 1M probes, local[8]): base_res 25.4 s vs 30-48 s
-        # at res 12..9 — the per-pair nearest_on_segments gate
-        # outweighs the 27M-row shuffle it saves, so the default
-        # stays base_res; the knob remains for boundary sets dense
-        # enough to invert that trade. Output is IDENTICAL at any
-        # cover_res (checksum-swept): the cover only proposes
-        # candidates — the per-tile inscribed/escribed radius gates
-        # + the exact 24-gon test in dist_fn decide membership.
-        cov_res = max(0, min(base_res,
-                             base_res if cover_res is None else cover_res))
         bidx = self._boundary_index()
         iidx = self._interior_index() if bidx is not None else None
-        fused = iidx is not None and (tol <= 0 or cov_res == base_res)
+        fused = iidx is not None
         # a finite-tolerance call never leaves a stale −1 record behind
         self.last_q2_iter_stats = {"base_path": "index" if fused else "join"}
-        dist_schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("dist_m", DoubleType()),
-        ])
         if fused:
             probe = pts.withColumn("cell_id", F.coalesce(
                 F.expr(grid.cell_id_sql_expr("lng", "lat", base_res)),
@@ -1837,7 +1860,7 @@ class SpatialEngine:
             keep = self._keep_region_ids(where)
             if tol >= 0:
                 rows = probe.mapInPandas(_make_q2_index_fn(
-                    bidx[0], iidx, base_res, keep, tol, k), dist_schema)
+                    bidx[0], iidx, base_res, keep, tol, k), self._DIST_SCHEMA)
                 d = F.col("dist_m")
                 return rows.join(F.broadcast(self.boundaries.select(
                     *self._PROP_COLS)), "region_id").select(
@@ -1886,14 +1909,14 @@ class SpatialEngine:
             return base_out
 
         if tol > 0:
-            if bidx is not None and cov_res == base_res:
+            if bidx is not None:
                 # interior index past its budget: the Q1 plan found the
                 # hits, and the index kernel scores only the misses (no
                 # tile bytes shuffle); `where` rides along as an
                 # in-kernel keep-region array
                 dists = misses.mapInPandas(_make_q2_index_fn(
                     bidx[0], None, base_res, self._keep_region_ids(where),
-                    tol, k), dist_schema)
+                    tol, k), self._DIST_SCHEMA)
                 return self._finish_tolerance(base_out, dists, k)
             cover_schema = StructType([
                 StructField("point_id", LongType()),
@@ -1903,14 +1926,14 @@ class SpatialEngine:
             ])
 
             def cover_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                # Fully vectorized 24-gon bbox cover at cov_res — no
+                # Fully vectorized 24-gon bbox cover at base_res — no
                 # per-row Python on the (potentially billions-of-docs)
                 # miss set.
                 for pdf in it:
                     pid = pdf["point_id"].to_numpy()
                     px = pdf["lng"].to_numpy(dtype=np.float64)
                     py = pdf["lat"].to_numpy(dtype=np.float64)
-                    rep, cells = _circle_cell_cover(px, py, tol, cov_res)
+                    rep, cells = _circle_cell_cover(px, py, tol, base_res)
                     yield pd.DataFrame({
                         "point_id": pid[rep].astype("int64"),
                         "lng": px[rep],
@@ -1929,121 +1952,40 @@ class SpatialEngine:
             misses = misses.repartition(F.col("point_id"))
             cover = misses.mapInPandas(cover_fn, cover_schema)
             tiles_b = self._tiles_for(where).filter(F.col("kind") == 0)
-            if cov_res < base_res:
-                tiles_b = tiles_b.withColumn(
-                    "_cover_cell",
-                    F.expr(grid.parent_cell_sql_expr(
-                        "cell_id", base_res, cov_res)))
-                cand = cover.join(
-                    tiles_b,
-                    cover["cell_id"] == tiles_b["_cover_cell"])
-            else:
-                cand = cover.join(tiles_b, "cell_id")
-            cand = cand.select(
-                "point_id", "lng", "lat", "region_id",
+            cand = cover.join(tiles_b, "cell_id").select(
+                "point_id", "lng", "lat", "cell_id", "region_id", "kind",
                 "minx", "miny", "maxx", "maxy", "tile_wkb")
-        else:  # tolerance -1: unlimited — every boundary tile is a candidate
-            # (the reference documents -1 as "traverses all data,
-            # performance extremely low", AreaCityQuery.java:100.)
-            # Iterative radius doubling: log-many bounded rounds, no
-            # driver-side materialization of the miss set at ANY size.
-            t = self.tiles.filter(F.col("kind") == 0)
-            if where:
-                keep = self.boundaries.filter(where).select("region_id")
-                t = t.join(F.broadcast(keep), "region_id", "left_semi")
-            dists = self._dists_unlimited_iterative(
-                misses, t, k, where=where, n_misses=n_miss)
+
+            def tol_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                # each candidate row is its own (probe, tile) pair,
+                # scored against the batch-local tile index
+                cache: dict[tuple, np.ndarray] = {}
+                for pdf in it:
+                    I, tile = _batch_tile_index(pdf, cache)
+                    p, t, d = _tolerance_scores(
+                        I, pdf["lng"].to_numpy(dtype=np.float64),
+                        pdf["lat"].to_numpy(dtype=np.float64),
+                        np.arange(len(pdf)), tile, tol)
+                    yield pd.DataFrame({
+                        "point_id": pdf["point_id"].to_numpy()[p]
+                        .astype("int64"),
+                        "region_id": I["region"][t],
+                        "dist_m": d,
+                    })
+
+            dists = cand.mapInPandas(tol_fn, self._DIST_SCHEMA)
             return self._finish_tolerance(base_out, dists, k)
-
-        def dist_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            """Planar-nearest + haversine per candidate, vectorized per
-            TILE (each tile's points tested in one numpy call). Gate:
-            the tile must intersect the per-point 24-gon circle — cheap
-            inscribed/escribed radius bounds short-circuit the exact
-            polygon×polygon test for all but razor-edge candidates."""
-            cos_pi24 = np.cos(np.pi / 24)
-            for pdf in it:
-                pids, rids, ds = [], [], []
-                for (rid, mnx, mny, mxx, mxy, twkb), grp in pdf.groupby(
-                        ["region_id", "minx", "miny", "maxx", "maxy",
-                         "tile_wkb"], sort=False):
-                    g = wkb.loads(bytes(twkb))
-                    segs = _distance_segs(g, mnx, mny, mxx, mxy)
-                    if not len(segs):
-                        continue
-                    px = grp["lng"].to_numpy()
-                    py = grp["lat"].to_numpy()
-                    nx, ny, d_planar = predicates.nearest_on_segments(px, py, segs)
-                    # anisotropy-corrected second candidate (r5): the
-                    # degree-planar argmin above can sit far from the
-                    # meter-nearest boundary point at high latitude;
-                    # the reported distance takes the haversine min
-                    # over both candidates. Gating (rmin/rmax + 24-gon)
-                    # stays on the degree-planar distance — hit-set
-                    # semantics unchanged.
-                    sx, sy, _ = predicates.nearest_on_segments_scaled(
-                        px, py, segs)
-                    keep = np.ones(len(px), dtype=bool)
-                    if tol > 0:
-                        # per-point circle radii in degrees — the exact
-                        # CreateSimpleCircle step-ladder arithmetic
-                        km = tol / 1000.0
-                        a = 0.01 if km < 5 else 0.1 if km < 50 else 1.0 if km < 500 else 10.0
-                        b = distance.haversine(px, py, px + a, py)
-                        c = distance.haversine(px, py, px, py + a)
-                        rb = tol / b * a
-                        rc = tol / c * a
-                        rmin = np.minimum(rb, rc) * cos_pi24
-                        rmax = np.maximum(rb, rc)
-                        definite = d_planar <= rmin
-                        impossible = d_planar > rmax
-                        keep = definite.copy()
-                        amb = np.nonzero(~definite & ~impossible)[0]
-                        if len(amb):
-                            # 24-gon vs the FILTERED piece boundary: the
-                            # probe is outside every candidate region
-                            # (it missed Q1 under the same `where`), so
-                            # circle ∩ region ≠ ∅ ⟺ the circle touches
-                            # true boundary — and g's window/bridge runs
-                            # must not vote (same artifact as the
-                            # distance itself, see _distance_segs)
-                            keep[amb] = _ambiguous_circle_keep(
-                                px[amb], py[amb], rb[amb], rc[amb],
-                                np.ascontiguousarray(segs[:, 0]),
-                                np.ascontiguousarray(segs[:, 1]),
-                                np.ascontiguousarray(segs[:, 2]),
-                                np.ascontiguousarray(segs[:, 3]),
-                                np.zeros(len(amb), dtype=np.int64),
-                                np.full(len(amb), len(segs),
-                                        dtype=np.int64))
-                    if keep.any():
-                        d0 = np.asarray(distance.haversine(
-                            nx[keep], ny[keep], px[keep], py[keep]))
-                        d1 = np.asarray(distance.haversine(
-                            sx[keep], sy[keep], px[keep], py[keep]))
-                        # the scaled candidate wins only on a GENUINE
-                        # improvement (rel 1e-12): for axis-aligned
-                        # segments both argmins are the same geometric
-                        # point up to fp ulps, and the guard keeps the
-                        # pre-r5 bit pattern (gate oracle hashes)
-                        d = np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
-                        pids.append(grp["point_id"].to_numpy()[keep])
-                        rids.append(np.full(int(keep.sum()), rid, dtype="int64"))
-                        ds.append(np.asarray(d, dtype="float64"))
-                if pids:
-                    yield pd.DataFrame({
-                        "point_id": np.concatenate(pids).astype("int64"),
-                        "region_id": np.concatenate(rids),
-                        "dist_m": np.concatenate(ds),
-                    })
-                else:
-                    yield pd.DataFrame({
-                        "point_id": pd.Series([], dtype="int64"),
-                        "region_id": pd.Series([], dtype="int64"),
-                        "dist_m": pd.Series([], dtype="float64"),
-                    })
-
-        dists = cand.mapInPandas(dist_fn, dist_schema)
+        # tolerance -1: unlimited — every boundary tile is a candidate
+        # (the reference documents -1 as "traverses all data,
+        # performance extremely low", AreaCityQuery.java:100.)
+        # Iterative radius doubling: log-many bounded rounds, no
+        # driver-side materialization of the miss set at ANY size.
+        t = self.tiles.filter(F.col("kind") == 0)
+        if where:
+            keep = self.boundaries.filter(where).select("region_id")
+            t = t.join(F.broadcast(keep), "region_id", "left_semi")
+        dists = self._dists_unlimited_iterative(
+            misses, t, k, where=where, n_misses=n_miss)
         return self._finish_tolerance(base_out, dists, k)
 
     def _dists_unlimited_iterative(self, misses: DataFrame,
@@ -2233,7 +2175,7 @@ class SpatialEngine:
                     .filter(F.expr(
                         "(shiftright(mask, cast(deep AS INT)) & 1) = 1"))
                     .select("point_id", "lng", "lat", "cell_id", "region_id",
-                            "deep", "minx", "miny", "maxx", "maxy",
+                            "deep", "kind", "minx", "miny", "maxx", "maxy",
                             "tile_wkb"))
             obs = Observation()
             per_pr = (self._cand_dists(cand)
@@ -2285,17 +2227,10 @@ class SpatialEngine:
                                n_pairs: int) -> DataFrame:
         """Terminal round of the tolerance=-1 iteration against the
         broadcast boundary index: one mapInPandas over the active
-        (point, deep) rows, no tile bytes shuffled or replicated.
-        Candidates per point are the kind-0 tiles of its needed deeps
-        (region in `keep` under `where`) that keep window-filtered
-        distance segments. Per (point, tile): both argmins flat via
-        `_flat_seg_argmins` on the antimeridian-unrolled probe (the
-        cogroup kernel's per-tile unroll); per (point, region): each
-        metric min-reduced on its own, then haversine at the two
-        winners under the 1e-12 guard — the `_dists_full_scan` and
-        `_cand_dists` definition, bit-identical distances. Geodesic
-        mode reduces the per-tile meters minimum (argmin haversines +
-        65 samples on the three winning segments) instead.
+        (point, deep) rows, no tile bytes shuffled or replicated. Each
+        batch folds its rows into (point, deep mask) and runs
+        `_nearest_per_region` on the broadcast index (`keep` = the
+        region filter under `where`).
 
         Points are processed in chunks of ≤ `_FLAT_ROWS` (pair,
         segment) rows. A point's rows may arrive split across batches
@@ -2304,102 +2239,10 @@ class SpatialEngine:
         bc, _ = self._boundary_index()
         refine = self.geodesic_refine
         max_rows = self._FLAT_ROWS
-        schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("dist_m", DoubleType()),
-        ])
 
         def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             I = bc.value
-            region, deep = I["region"], I["deep"]
-            fptr = I["fseg_ptr"]
-            FX1, FY1, FX2, FY2 = I["FX1"], I["FY1"], I["FX2"], I["FY2"]
-            fcnt = fptr[1:] - fptr[:-1]
-            cand = (I["kind"] == 0) & (fcnt > 0)
-            if keep is not None:
-                cand &= _in_sorted(region, keep)
-            cxc = (I["minx"] + I["maxx"]) / 2.0
-
-            def chunk(px, py, tl, gs):
-                """(point, region, dist) rows for points px/py against
-                tiles `tl`, grouped by region with group starts `gs`."""
-                P, T = len(px), len(tl)
-                prep = np.repeat(np.arange(P, dtype=np.int64), T)
-                tix = np.tile(tl, P)
-                scnt = fcnt[tix]
-                cum = np.cumsum(scnt)
-                cuts = [0]
-                while cuts[-1] < len(tix):  # ≤ max_rows rows per piece
-                    base = cum[cuts[-1] - 1] if cuts[-1] else 0
-                    cuts.append(max(cuts[-1] + 1, int(np.searchsorted(
-                        cum, base + max_rows, side="right"))))
-                res = []
-                for a, b in zip(cuts[:-1], cuts[1:]):
-                    pp, tt = prep[a:b], tix[a:b]
-                    ppx = px[pp]
-                    # antimeridian unroll: shift the PROBE a whole
-                    # number of turns to within 180° of the tile for
-                    # the argmins only (round()==0 → pxa == px
-                    # bit-for-bit for every in-range pair)
-                    pxa = ppx - 360.0 * np.round((ppx - cxc[tt]) / 360.0)
-                    r = _flat_seg_argmins(pxa, py[pp], fptr[tt], scnt[a:b],
-                                          FX1, FY1, FX2, FY2,
-                                          hav_proxy=refine)
-                    if not refine:
-                        res.append(r[:6])
-                        continue
-                    # geodesic mode: every per-tile candidate in METERS
-                    # (haversine at both argmins + 65 samples along the
-                    # three winning segments), min-reduced across tiles
-                    # in meters — a degree metric can pick the wrong
-                    # tile at planetary range
-                    qy = py[pp]
-                    v = np.minimum(
-                        np.asarray(distance.haversine(r[0], r[1], ppx, qy)),
-                        np.asarray(distance.haversine(r[3], r[4], ppx, qy)))
-                    for j in (r[8], r[6], r[7]):
-                        for c0 in range(0, len(j), 8192):
-                            sl = slice(c0, c0 + 8192)
-                            js = j[sl]
-                            np.minimum(v[sl], _refine_hav_on_segments(
-                                np.stack([FX1[js], FY1[js], FX2[js],
-                                          FY2[js]], axis=1),
-                                ppx[sl], qy[sl]), out=v[sl])
-                    res.append((v,))
-                # (point, region) groups: every point pairs with the
-                # same region-sorted tile list
-                gst = (np.arange(P, dtype=np.int64)[:, None] * T
-                       + gs[None, :]).ravel()
-                gp = np.repeat(np.arange(P, dtype=np.int64), len(gs))
-                rg = np.tile(region[tl[gs]], P)
-                if refine:
-                    v = np.concatenate([x[0] for x in res])
-                    return gp, rg, np.minimum.reduceat(v, gst)
-                nx, ny, d2, sx, sy, d2s = (np.concatenate([x[i] for x in res])
-                                           for i in range(6))
-                grp = np.repeat(np.arange(len(gst)),
-                                np.diff(np.append(gst, len(tix))))
-                row = np.arange(len(tix), dtype=np.int64)
-
-                def first_min(v):
-                    # each metric's own argmin per (point, region),
-                    # first tile in index order on ties
-                    vmin = np.minimum.reduceat(v, gst)
-                    return np.minimum.reduceat(
-                        np.where(v == vmin[grp], row, len(row)), gst)
-
-                w = first_min(np.sqrt(d2))
-                ws = first_min(np.sqrt(d2s))
-                d0 = np.asarray(distance.haversine(
-                    nx[w], ny[w], px[gp], py[gp]), dtype=np.float64)
-                d1 = np.asarray(distance.haversine(
-                    sx[ws], sy[ws], px[gp], py[gp]), dtype=np.float64)
-                # same genuine-improvement guard as the tolerance paths
-                return gp, rg, np.where(d1 < d0 * (1.0 - 1e-12), d1, d0)
-
             for pdf in it:
-                out_p, out_r, out_d = [], [], []
                 pid = pdf["point_id"].to_numpy()
                 bit = np.left_shift(np.int64(1),
                                     pdf["deep"].to_numpy().astype(np.int64))
@@ -2407,32 +2250,12 @@ class SpatialEngine:
                                              return_inverse=True)
                 msk = np.zeros(len(upid), dtype=np.int64)
                 np.bitwise_or.at(msk, inv, bit)
-                px = pdf["lng"].to_numpy(dtype=np.float64)[first]
-                py = pdf["lat"].to_numpy(dtype=np.float64)[first]
-                for m in np.unique(msk):
-                    # the mask's tiles, region-sorted (index order
-                    # within a region), and each region's first slot
-                    tl = np.nonzero(cand & (((m >> deep) & 1) == 1))[0]
-                    if not len(tl):
-                        continue
-                    tl = tl[np.argsort(region[tl], kind="stable")]
-                    gs = np.nonzero(np.diff(region[tl], prepend=-1))[0]
-                    sel = np.nonzero(msk == m)[0]
-                    step = max(1, max_rows // int(fcnt[tl].sum()))
-                    for c0 in range(0, len(sel), step):
-                        ps = sel[c0:c0 + step]
-                        p, rg, d = chunk(px[ps], py[ps], tl, gs)
-                        out_p.append(upid[ps][p])
-                        out_r.append(rg)
-                        out_d.append(d)
-                yield pd.DataFrame({
-                    "point_id": (np.concatenate(out_p) if out_p
-                                 else np.empty(0)).astype("int64"),
-                    "region_id": (np.concatenate(out_r) if out_r
-                                  else np.empty(0)).astype("int64"),
-                    "dist_m": (np.concatenate(out_d) if out_d
-                               else np.empty(0)).astype("float64"),
-                })
+                p, rg, d = _nearest_per_region(
+                    I, pdf["lng"].to_numpy(dtype=np.float64)[first],
+                    pdf["lat"].to_numpy(dtype=np.float64)[first], msk,
+                    keep, refine, max_rows)
+                yield pd.DataFrame({"point_id": upid[p].astype("int64"),
+                                    "region_id": rg, "dist_m": d})
 
         src = active.select("point_id", "lng", "lat", "deep")
         if n_pairs > 4096:
@@ -2443,26 +2266,26 @@ class SpatialEngine:
             # exchange up to 1,000 points)
             src = src.repartition(
                 int(self.spark.sparkContext.defaultParallelism), "point_id")
-        return src.mapInPandas(fn, schema)
+        return src.mapInPandas(fn, self._DIST_SCHEMA)
 
     def _dists_full_scan(self, active: DataFrame,
                          tiles_b: DataFrame) -> DataFrame:
         """Terminal round of the tolerance=-1 iteration for boundary
         sets past the index budget (`_dists_full_scan_index` is the
-        in-budget twin): an exact full
-        reverse scan for the remaining (point, deep) pairs, expressed
-        as a cogrouped applyInPandas — points hash-bucket by point_id,
-        the needed deeps' boundary tiles REPLICATE to every bucket
-        (tile dim ≪ point count; at scale only the continent-distant
-        deep levels are still active here, so the replicated side is a
-        handful of far regions' tiles). Inside each group the old
-        reverse-broadcast kernel runs unchanged: one vectorized
-        planar-nearest call per tile over the bucket's points, argmin
-        min-reduce per region, haversine once at each winner — pair
+        in-budget twin): an exact full reverse scan for the remaining
+        (point, deep) pairs, expressed as a cogrouped applyInPandas —
+        points hash-bucket by point_id, the needed deeps' boundary
+        tiles REPLICATE to every bucket (tile dim ≪ point count; at
+        scale only the continent-distant deep levels are still active
+        here, so the replicated side is a handful of far regions'
+        tiles). Each group builds its batch-local tile index
+        (`_batch_tile_index`, tile WKB decoded once per task) and runs
+        `_nearest_per_region`, the index regime's kernel, on it — pair
         formation never materializes as rows, and the driver holds
         nothing."""
         B = max(int(self.spark.sparkContext.defaultParallelism), 8)
         refine = self.geodesic_refine
+        max_rows = self._FLAT_ROWS
         act_pts = active.groupBy("point_id", "lng", "lat").agg(
             F.expr("bit_or(cast(shiftleft(1, cast(deep AS INT)) AS BIGINT))")
             .alias("mask"))
@@ -2470,133 +2293,25 @@ class SpatialEngine:
             "b", F.pmod(F.col("point_id"), F.lit(B)).cast("int"))
         deeps_needed = active.select("deep").distinct()
         tls = (tiles_b.join(F.broadcast(deeps_needed), "deep", "left_semi")
-               .select("deep", "cell_id", "region_id", "minx", "miny",
-                       "maxx", "maxy", "tile_wkb")
+               .select("deep", "cell_id", "region_id", "kind", "minx",
+                       "miny", "maxx", "maxy", "tile_wkb")
                .crossJoin(self.spark.range(B)
                           .select(F.col("id").cast("int").alias("b"))))
-        schema = StructType([
-            StructField("point_id", LongType()),
-            StructField("region_id", LongType()),
-            StructField("dist_m", DoubleType()),
-        ])
+        cache: dict[tuple, np.ndarray] = {}
 
         def kernel(pts: pd.DataFrame, tls_: pd.DataFrame) -> pd.DataFrame:
-            if not len(pts) or not len(tls_):
-                return pd.DataFrame({
-                    "point_id": pd.Series([], dtype="int64"),
-                    "region_id": pd.Series([], dtype="int64"),
-                    "dist_m": pd.Series([], dtype="float64"),
-                })
-            px = pts["lng"].to_numpy(dtype=np.float64)
-            py = pts["lat"].to_numpy(dtype=np.float64)
-            pid = pts["point_id"].to_numpy()
-            msk = pts["mask"].to_numpy()
-            sel_by_deep: dict[int, np.ndarray] = {}
-            # rid → (sel, planar_d, nx, ny) min-reduced across its tiles
-            best: dict[int, tuple] = {}
-            for row in tls_.itertuples(index=False):
-                dp = int(row.deep)
-                sel = sel_by_deep.get(dp)
-                if sel is None:
-                    sel = sel_by_deep[dp] = np.nonzero(
-                        (msk >> dp) & 1)[0]
-                if not len(sel):
-                    continue
-                g = wkb.loads(bytes(row.tile_wkb))
-                segs = _distance_segs(g, row.minx, row.miny,
-                                      row.maxx, row.maxy)
-                if not len(segs):
-                    continue
-                rid = int(row.region_id)
-                ent = best.get(rid)
-                # antimeridian unroll (late r5): shift the PROBE by a
-                # whole number of turns to within 180° of the tile, so
-                # the planar argmins can see across ±180 (haversine is
-                # 360°-periodic, so evaluation never needs the shift;
-                # for every in-range pair round() is 0 and pxa == px
-                # bit-for-bit)
-                cxc = (row.minx + row.maxx) / 2.0
-                pxa = px[sel] - 360.0 * np.round((px[sel] - cxc) / 360.0)
-                nx, ny, d, jn = predicates.nearest_on_segments_idx(
-                    pxa, py[sel], segs)
-                # r5 anisotropy-corrected second candidate: min-reduced
-                # across tiles in ITS OWN metric, haversine decided at
-                # the end (same two-candidate scheme as tolerance>0)
-                sx, sy, sd, js = predicates.nearest_on_segments_scaled_idx(
-                    pxa, py[sel], segs)
-                if refine:
-                    # geodesic mode: evaluate EVERYTHING per tile in
-                    # METERS and min-reduce that — cross-tile reduction
-                    # by a degree metric can pick the wrong tile at
-                    # planetary range (the reference min-reduces meters
-                    # across its splits, which is why it occasionally
-                    # landed exact where the degree reduction was 25 km
-                    # off). Per-tile candidates: haversine at both
-                    # argmin points + 65 samples along each winning
-                    # segment.
-                    h_n = np.asarray(distance.haversine(
-                        nx, ny, px[sel], py[sel]), dtype=np.float64)
-                    h_s = np.asarray(distance.haversine(
-                        sx, sy, px[sel], py[sel]), dtype=np.float64)
-                    jp = _best_segment_by_hav_proxy(pxa, py[sel], segs)
-                    v = np.minimum(np.minimum(
-                        np.minimum(h_n, h_s),
-                        _refine_hav_on_segments(segs[jp], px[sel],
-                                                py[sel])),
-                        np.minimum(
-                            _refine_hav_on_segments(segs[jn], px[sel],
-                                                    py[sel]),
-                            _refine_hav_on_segments(segs[js], px[sel],
-                                                    py[sel])))
-                    if ent is None:
-                        best[rid] = (sel, v)
-                    else:
-                        np.minimum(ent[1], v, out=ent[1])
-                    continue
-                if ent is None:
-                    best[rid] = (sel, np.asarray(d, dtype=np.float64),
-                                 np.asarray(nx), np.asarray(ny),
-                                 np.asarray(sd, dtype=np.float64),
-                                 np.asarray(sx), np.asarray(sy))
-                else:
-                    _, bd, bnx, bny, bsd, bsx, bsy = ent
-                    m = d < bd
-                    bd[m] = d[m]
-                    bnx[m] = nx[m]
-                    bny[m] = ny[m]
-                    ms = sd < bsd
-                    bsd[ms] = sd[ms]
-                    bsx[ms] = sx[ms]
-                    bsy[ms] = sy[ms]
-            out_p, out_r, out_d = [], [], []
-            for rid, ent in best.items():
-                sel = ent[0]
-                out_p.append(pid[sel])
-                out_r.append(np.full(len(sel), rid, dtype=np.int64))
-                if refine:
-                    out_d.append(ent[1])
-                    continue
-                _, bd, bnx, bny, bsd, bsx, bsy = ent
-                d0 = np.asarray(distance.haversine(
-                    bnx, bny, px[sel], py[sel]), dtype=np.float64)
-                d1 = np.asarray(distance.haversine(
-                    bsx, bsy, px[sel], py[sel]), dtype=np.float64)
-                # same genuine-improvement guard as the tolerance paths
-                out_d.append(np.where(d1 < d0 * (1.0 - 1e-12), d1, d0))
-            if not out_p:
-                return pd.DataFrame({
-                    "point_id": pd.Series([], dtype="int64"),
-                    "region_id": pd.Series([], dtype="int64"),
-                    "dist_m": pd.Series([], dtype="float64"),
-                })
+            I, _ = _batch_tile_index(tls_, cache)
+            p, rg, d = _nearest_per_region(
+                I, pts["lng"].to_numpy(dtype=np.float64),
+                pts["lat"].to_numpy(dtype=np.float64),
+                pts["mask"].to_numpy().astype(np.int64), None, refine,
+                max_rows)
             return pd.DataFrame({
-                "point_id": np.concatenate(out_p).astype("int64"),
-                "region_id": np.concatenate(out_r),
-                "dist_m": np.concatenate(out_d),
-            })
+                "point_id": pts["point_id"].to_numpy()[p].astype("int64"),
+                "region_id": rg, "dist_m": d})
 
         return (pts_b.groupby("b").cogroup(tls.groupby("b"))
-                .applyInPandas(kernel, schema))
+                .applyInPandas(kernel, self._DIST_SCHEMA))
 
     def _cand_dists(self, cand: DataFrame) -> DataFrame:
         """Exact per-(point, region) distances for (point, region,
@@ -2608,17 +2323,15 @@ class SpatialEngine:
         range the two differ because longitudinal meters shrink with
         latitude).
 
-        Stage 1 (Arrow batch): candidate rows group per TILE via a
-        lexsort over (cell_id, region_id, bbox bit-keys) — no per-row
-        Python, no byte-string hashing — each tile's WKB decodes once
-        per task (registry cache) and one vectorized planar-nearest
-        call runs per tile group (the Q3 refine's _tile_groups
-        pattern). Stage 2: a JVM struct-min aggregation picks the
-        planar argmin per (point, region) — map-side combine, skinny
-        shuffle — then one thin Arrow pass computes haversine at the
-        winners (the same numpy arithmetic as every other engine
-        distance)."""
+        Stage 1 (Arrow batch): each candidate row is one (point, tile)
+        pair, scored by `_pair_argmins` against the batch-local tile
+        index (`_batch_tile_index`, tile WKB decoded once per task).
+        Stage 2: a JVM struct-min aggregation picks each metric's
+        argmin per (point, region) — map-side combine, skinny shuffle —
+        then one thin Arrow pass computes haversine at the winners (the
+        same numpy arithmetic as every other engine distance)."""
         refine = self.geodesic_refine
+        max_rows = self._FLAT_ROWS
         schema = StructType([
             StructField("point_id", LongType()),
             StructField("region_id", LongType()),
@@ -2636,113 +2349,30 @@ class SpatialEngine:
             StructField("vmin", DoubleType()),
         ])
 
-        _COLS = ("point_id", "region_id", "deep", "lng", "lat",
-                 "planar_d", "nx", "ny", "scaled_d", "sx", "sy", "vmin")
-
-        def _empty():
-            return pd.DataFrame({
-                c: pd.Series([], dtype=(
-                    "int64" if c in ("point_id", "region_id")
-                    else "int32" if c == "deep" else "float64"))
-                for c in _COLS})
-
         def near_fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            registry: dict[tuple, np.ndarray] = {}
+            cache: dict[tuple, np.ndarray] = {}
             for pdf in it:
-                n = len(pdf)
-                if n == 0:
-                    yield _empty()
-                    continue
-                cid = pdf["cell_id"].to_numpy()
-                rid = pdf["region_id"].to_numpy()
-                mnxf = pdf["minx"].to_numpy(dtype=np.float64)
-                mnyf = pdf["miny"].to_numpy(dtype=np.float64)
-                mxxf = pdf["maxx"].to_numpy(dtype=np.float64)
-                mxyf = pdf["maxy"].to_numpy(dtype=np.float64)
-                xb = mnxf.view(np.int64)
-                yb = mnyf.view(np.int64)
-                order = np.lexsort((yb, xb, rid, cid))
-                cs, rs, xs, ys = cid[order], rid[order], xb[order], yb[order]
-                new_grp = np.empty(n, dtype=bool)
-                new_grp[0] = True
-                new_grp[1:] = (np.diff(cs) != 0) | (np.diff(rs) != 0) | \
-                              (np.diff(xs) != 0) | (np.diff(ys) != 0)
-                starts = np.nonzero(new_grp)[0]
-                ends = np.append(starts[1:], n)
-                px = pdf["lng"].to_numpy(dtype=np.float64)[order]
-                py = pdf["lat"].to_numpy(dtype=np.float64)[order]
-                pid_o = pdf["point_id"].to_numpy()[order]
-                dp_o = pdf["deep"].to_numpy()[order]
-                wkb_col = pdf["tile_wkb"].to_numpy()[order]
-                nx = np.empty(n)
-                ny = np.empty(n)
-                d = np.empty(n)
-                sxa = np.empty(n)
-                sya = np.empty(n)
-                sda = np.empty(n)
-                vmin = np.full(n, np.inf)
-                valid = np.ones(n, dtype=bool)
-                mnx_o = mnxf[order]
-                mny_o = mnyf[order]
-                mxx_o = mxxf[order]
-                mxy_o = mxyf[order]
-                for s0, s1 in zip(starts, ends):
-                    key = (cs[s0], rs[s0], xs[s0], ys[s0])
-                    segs = registry.get(key)
-                    if segs is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        segs = _distance_segs(g, mnx_o[s0], mny_o[s0],
-                                              mxx_o[s0], mxy_o[s0])
-                        registry[key] = segs
-                    if not len(segs):
-                        valid[s0:s1] = False
-                        continue
-                    # antimeridian unroll: shift the probe to within
-                    # 180° of the tile for the ARGMIN only (round()==0
-                    # → pxa == px bit-for-bit for every in-range pair)
-                    cxc = (mnx_o[s0] + mxx_o[s0]) / 2.0
-                    pxa = px[s0:s1] - 360.0 * np.round(
-                        (px[s0:s1] - cxc) / 360.0)
-                    nx[s0:s1], ny[s0:s1], d[s0:s1], jn = \
-                        predicates.nearest_on_segments_idx(
-                            pxa, py[s0:s1], segs)
-                    sxa[s0:s1], sya[s0:s1], sda[s0:s1], js = \
-                        predicates.nearest_on_segments_scaled_idx(
-                            pxa, py[s0:s1], segs)
-                    if refine:
-                        # geodesic mode: per-tile candidates evaluated
-                        # in METERS (see _dists_full_scan's refine
-                        # branch for the rationale)
-                        h_n = np.asarray(distance.haversine(
-                            nx[s0:s1], ny[s0:s1],
-                            px[s0:s1], py[s0:s1]), dtype=np.float64)
-                        h_s = np.asarray(distance.haversine(
-                            sxa[s0:s1], sya[s0:s1],
-                            px[s0:s1], py[s0:s1]), dtype=np.float64)
-                        jp = _best_segment_by_hav_proxy(
-                            pxa, py[s0:s1], segs)
-                        vmin[s0:s1] = np.minimum(np.minimum(
-                            np.minimum(h_n, h_s),
-                            _refine_hav_on_segments(
-                                segs[jp], px[s0:s1], py[s0:s1])),
-                            np.minimum(
-                                _refine_hav_on_segments(
-                                    segs[jn], px[s0:s1], py[s0:s1]),
-                                _refine_hav_on_segments(
-                                    segs[js], px[s0:s1], py[s0:s1])))
+                I, tile = _batch_tile_index(pdf, cache)
+                fptr = I["fseg_ptr"]
+                # pairs whose tile keeps window-filtered segments
+                v = np.nonzero(fptr[tile + 1] > fptr[tile])[0]
+                px = pdf["lng"].to_numpy(dtype=np.float64)[v]
+                py = pdf["lat"].to_numpy(dtype=np.float64)[v]
+                nx, ny, d2, sx, sy, d2s, vm = _pair_argmins(
+                    I, px, py, tile[v], refine, max_rows)
                 yield pd.DataFrame({
-                    "point_id": pid_o[valid].astype("int64"),
-                    "region_id": rs[valid].astype("int64"),
-                    "deep": dp_o[valid].astype("int32"),
-                    "lng": px[valid],
-                    "lat": py[valid],
-                    "planar_d": d[valid],
-                    "nx": nx[valid],
-                    "ny": ny[valid],
-                    "scaled_d": sda[valid],
-                    "sx": sxa[valid],
-                    "sy": sya[valid],
-                    "vmin": vmin[valid],
+                    "point_id": pdf["point_id"].to_numpy()[v].astype("int64"),
+                    "region_id": I["region"][tile[v]],
+                    "deep": pdf["deep"].to_numpy()[v].astype("int32"),
+                    "lng": px,
+                    "lat": py,
+                    "planar_d": np.sqrt(d2),
+                    "nx": nx,
+                    "ny": ny,
+                    "scaled_d": np.sqrt(d2s),
+                    "sx": sx,
+                    "sy": sy,
+                    "vmin": vm if refine else np.full(len(v), np.inf),
                 })
 
         near = cand.mapInPandas(near_fn, schema)
@@ -3177,7 +2807,7 @@ class SpatialEngine:
                 tests, where a Sutherland–Hodgman closure or bridge run
                 along the expanded clip window — which can lie OUTSIDE
                 the region — must not witness an intersection; see
-                _distance_segs)."""
+                _tile_index)."""
                 cid = pdf["cell_id"].to_numpy()[idx]
                 rid = pdf["region_id"].to_numpy()[idx]
                 xb = tmnx[idx].view(np.int64)
@@ -3200,8 +2830,7 @@ class SpatialEngine:
                     key = (cs[s0], rs[s0], xs[s0], ys[s0])
                     ent = registry.get(key)
                     if ent is None:
-                        g = wkb.loads(bytes(wkb_col[s0]))
-                        raw = predicates.segments_of_rings(core.all_rings(g))
+                        raw = _tile_segs(wkb_col[s0])
                         e = tiler.CLIP_EPS
                         if len(raw):
                             wx0 = mnx_o[s0] - e

@@ -493,11 +493,9 @@ def nearest_on_segments_scaled(px: np.ndarray, py: np.ndarray,
     the scaled projection parameter equals the unscaled one (per-axis
     clamping), so rect-fixture outputs are bit-identical either way.
 
-    Kept arithmetically in lockstep with the flat transcription
-    engine._flat_seg_argmins — same formulas, same first-hit tie-break
-    (np.argmin) — so the index and join/cogroup Q2 paths stay
-    bit-identical (tests/test_q2_index_parity.py,
-    tests/test_q2_nearest_index_parity.py).
+    The reference the flat kernel engine._flat_seg_argmins is tested
+    against (tests/test_flat_seg_argmins.py): same formulas, same
+    first-hit tie-break (np.argmin).
 
     Returns (sx, sy, sd): the winning point and its SCALED-metric
     distance (degrees, lng compressed by cos lat) — sd orders argmin

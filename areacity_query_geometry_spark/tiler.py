@@ -71,7 +71,7 @@ def _dissolve_window_runs(ring, wx0, wy0, wx1, wy1):
     connected by zero-width channels running along the window boundary
     — antiparallel overlapping runs whose enclosed area cancels under
     even-odd parity but whose SEGMENTS lie outside the region (the
-    false-distance/false-intersects artifact, see engine._distance_segs)
+    false-distance/false-intersects artifact, see engine._tile_index)
     and whose polygons are invalid for downstream JTS consumers of the
     exported `.wkbs`. This pass makes the stored geometry clean:
 

@@ -1,15 +1,17 @@
-"""The Q1 boundary refine has two regimes (engine._make_refine_fn):
-a per-tile (points × segments) broadcast loop for few big tiles, and a
-ragged-CSR single-kernel path (engine._refine_csr) for many tiny tiles
-(reference-density boundary sets join ~9k groups of ~7 points × ~3
-segments per Arrow batch — there the loop overhead dwarfs the math).
-Both must implement the IDENTICAL predicate: crossing parity with the
+"""The Q1 boundary refine scores (probe, tile) pairs with ONE flat
+kernel in both regimes: engine._pair_hits over the boundary-index
+layout (the broadcast index, or the batch-local copy the join refine
+builds from its tile rows with engine._tile_index). This pins it to
+the per-tile (points × segments) broadcast arithmetic it replaced,
+kept below verbatim as `_loop_reference`: crossing parity with the
 half-open (p < xint) rule plus EPS on-segment acceptance, degenerate
-segments included. No Spark needed — the kernels are pure numpy."""
+segments included. The random tile sets are shaped like a
+reference-density batch (hundreds of tiles of a few segments, a few
+points each). No Spark needed — the kernels are pure numpy."""
 import numpy as np
 import pytest
 
-from areacity_query_geometry_spark.engine import _refine_csr
+from areacity_query_geometry_spark.engine import _pair_hits, _tile_index
 from areacity_query_geometry_spark.geom import predicates
 
 
@@ -54,6 +56,17 @@ def _loop_reference(ents, starts, ends, px0, py0):
     return hit
 
 
+def _pair_helper(ents, starts, ends, px0, py0):
+    """The ents' segments through engine._tile_index, then every
+    (point, group) pair through engine._pair_hits."""
+    n = len(ents)
+    z = np.zeros(n)
+    I = _tile_index(np.arange(n), np.zeros(n), np.zeros(n), z, z, z, z,
+                    [np.column_stack(e[:4]) for e in ents])
+    tiles = np.repeat(np.arange(n, dtype=np.int64), ends - starts)
+    return _pair_hits(I, tiles, px0, py0)
+
+
 @pytest.mark.parametrize("seed", [7, 23, 1009])
 def test_csr_matches_loop(seed):
     rng = np.random.RandomState(seed)
@@ -75,7 +88,7 @@ def test_csr_matches_loop(seed):
         e = ents[gi]
         px0[s0] = (e[0][0] + e[2][0]) / 2
         py0[s0] = (e[1][0] + e[3][0]) / 2
-    got = _refine_csr(ents, starts, ends, px0, py0)
+    got = _pair_helper(ents, starts, ends, px0, py0)
     want = _loop_reference(ents, starts, ends, px0, py0)
     assert (got == want).all()
     assert want.any()  # the fixture actually exercises hits
@@ -91,6 +104,6 @@ def test_csr_single_point_groups():
     ends = starts + 1
     px0 = rng.rand(ngroups)
     py0 = rng.rand(ngroups)
-    got = _refine_csr(ents, starts, ends, px0, py0)
+    got = _pair_helper(ents, starts, ends, px0, py0)
     want = _loop_reference(ents, starts, ends, px0, py0)
     assert (got == want).all()

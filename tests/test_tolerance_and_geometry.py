@@ -27,8 +27,8 @@ class TestTolerance:
         # anisotropy-corrected second argmin candidate the engine
         # reports exactly that (pre-r5 it reported 1456.68 — the
         # degree-planar argmin's point, 7.2 m high). Either way it must
-        # NOT sit at a tile clip artifact: before the _distance_segs
-        # fix, Sutherland–Hodgman bridge runs along the expanded cell
+        # NOT sit at a tile clip artifact: before the window-run
+        # filter, Sutherland–Hodgman bridge runs along the expanded cell
         # window (OUTSIDE the region) reported 785 m at base_res 13 and
         # 126 m at base_res 9 — resolution-dependent and geometrically
         # impossible. Pin the honest band [true, old planar answer].
@@ -41,13 +41,15 @@ class TestTolerance:
         """Kernel regression for the offshore-distance bug: clipping a
         DISCONNECTED region (two islands) to one cell makes
         Sutherland–Hodgman emit bridge runs along the expanded window
-        that lie outside the region; _distance_segs must drop every
-        window-collinear run so nearest-distance sees only true
+        that lie outside the region; the boundary-index layout's
+        distance segments (engine._tile_index's FX1..FY2) must drop
+        every window-collinear run so nearest-distance sees only true
         boundary segments."""
         import numpy as np
 
         from areacity_query_geometry_spark import tiler
-        from areacity_query_geometry_spark.engine import _distance_segs
+        from areacity_query_geometry_spark.engine import (
+            _tile_index, _tile_segs)
         from areacity_query_geometry_spark.geom import predicates, wkb
 
         # ONE ring with two prongs dipping into the cell [0,8]² from
@@ -61,7 +63,7 @@ class TestTolerance:
         e = tiler.CLIP_EPS
         c = predicates.clip_ring_to_rect(
             ring, minx - e, miny - e, maxx + e, maxy + e)
-        piece = wkb.loads(wkb.dumps({"type": "Polygon", "rings": [c]}))
+        piece = wkb.dumps({"type": "Polygon", "rings": [c]})
         raw = predicates.segments_of_rings([c])
         top = (raw[:, 1] == maxy + e) & (raw[:, 3] == maxy + e)
         # the artifact exists: runs along the expanded window top,
@@ -72,7 +74,10 @@ class TestTolerance:
             np.array([3.5]), np.array([9.5]), raw)
         assert d0[0] < 1.51  # the bridge, geometrically impossible
 
-        segs = _distance_segs(piece, minx, miny, maxx, maxy)
+        idx = _tile_index([0], [0], [0], [minx], [miny], [maxx], [maxy],
+                          [_tile_segs(piece)])
+        segs = np.column_stack([idx["FX1"], idx["FY1"],
+                                idx["FX2"], idx["FY2"]])
         assert len(segs)
         x1, y1, x2, y2 = segs[:, 0], segs[:, 1], segs[:, 2], segs[:, 3]
         assert not (((x1 == x2) & ((x1 == minx - e) | (x1 == maxx + e)))

@@ -44,8 +44,8 @@ def main():
     spark = SparkSession.builder.appName("aqgs-q2").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     cpus = spark.sparkContext.defaultParallelism
-    # The cover→tile SMJ feeding dist_fn has data-dependent per-pair
-    # kernel cost (hot boundary cells): at shuffle.partitions=cpus the
+    # The cover→tile SMJ feeding the tolerance kernel has data-dependent
+    # per-pair kernel cost (hot boundary cells): at shuffle.partitions=cpus the
     # slowest task ran 1.6× the fastest (measured 10.9-17.2 s spread on
     # 8 tasks), gating the stage. 8 partitions per core + a small AQE
     # advisory keeps tasks ~2-3 s and balanced on BOTH legs; identical
